@@ -113,7 +113,10 @@ object Bench {
     val full = s"""{"metric":"total","value":$total,"unit":"sec","errors":$errJson,"spread":${numMap(spread)},"shuffle_mb":$shJson,"spill_mb":$spJson,"queries":${numMap(results)},"sf":"$sfDir"}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get("bench_out.json"),
       (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case _: Throwable => () } // stdout carries the contract line
+    catch { // stdout carries the contract line; the failure goes to stderr
+      case e: Throwable =>
+        System.err.println(s"bench_out.json not written: $e")
+    }
     // the stdout CONTRACT line stays one line with the full `queries` map,
     // but slimmed to survive any plausible capture buffer: seconds at 4 dp
     // (0.1 ms — far below run noise; full precision lives in

@@ -679,28 +679,30 @@ object Graph {
       .transform(graft.ops.Checkpoint.cut(_, eager = true))
     var prev = obs0.get("_n").asInstanceOf[Long]
     var rounds = 0
-    var done = prev == 0
-    while (!done) {
-      if (rounds >= maxRounds)
-        throw new IllegalStateException(
-          s"kCore: not converged after $maxRounds rounds ($prev edges)")
+    // convergence is tested BEFORE the round budget (kTruss's order): a
+    // peel that settles on exactly the last allowed round returns
+    while (true) {
       val keep = sym.groupBy("u").agg(count(lit(1)).as("_deg"))
         .filter(col("_deg") >= k).select("u")
       val obs = org.apache.spark.sql.Observation()
-      val next = sym.join(keep, "u")
+      sym = sym.join(keep, "u")
         .join(keep.select(col("u").as("v")), "v")
         .select("u", "v")
         .observe(obs, count(lit(1)).as("_n"))
         .transform(graft.ops.Checkpoint.cut(_, eager = true))
       val n = obs.get("_n").asInstanceOf[Long]
-      sym = next
-      if (n == prev || n == 0) done = true
-      else { prev = n; rounds += 1 }
+      if (n == prev || n == 0)
+        // at the n == prev fixpoint every degree is ≥ k and the filter is
+        // a no-op; on the n == 0 exit (no k-core) the result is empty
+        return sym.groupBy(col("u").as("id"))
+          .agg(count(lit(1)).as("core_deg")).filter(col("core_deg") >= k)
+      if (rounds >= maxRounds)
+        throw new IllegalStateException(
+          s"kCore: not converged after $maxRounds rounds ($n edges)")
+      prev = n
+      rounds += 1
     }
-    // at the n == prev fixpoint every degree is ≥ k and the filter is a
-    // no-op; on the n == 0 exit (no k-core) it empties the result
-    sym.groupBy(col("u").as("id")).agg(count(lit(1)).as("core_deg"))
-      .filter(col("core_deg") >= k)
+    throw new IllegalStateException("unreachable")
   }
 
   /** k-truss (Cohen 2008): the maximal subgraph where every EDGE sits in

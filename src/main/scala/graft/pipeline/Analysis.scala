@@ -37,11 +37,14 @@ object Analysis {
     import spark.implicits._
     Relational.requireColumns(integrated, Seq("symbol", "hour", target)) // P11
     val errors = Seq.newBuilder[(String, String, String)]
-    // every stage reads the panel: persist once, release at the end
-    val panel = integrated.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try runStages(panel, target, maxLag, nLags, horizon, maxIter, outDir,
+    // every stage reads the panel: persist once and release at the end —
+    // unless the caller already cached it, whose cache must outlive run
+    import org.apache.spark.storage.StorageLevel
+    val owned = integrated.storageLevel == StorageLevel.NONE
+    if (owned) integrated.persist(StorageLevel.MEMORY_AND_DISK)
+    try runStages(integrated, target, maxLag, nLags, horizon, maxIter, outDir,
       forecastParallelism, errors)
-    finally panel.unpersist(blocking = false)
+    finally if (owned) integrated.unpersist(blocking = false)
   }
 
   private def runStages(integrated: DataFrame, target: String, maxLag: Int,

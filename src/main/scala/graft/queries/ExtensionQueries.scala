@@ -109,7 +109,8 @@ object ExtensionQueries {
     graft.streaming.StreamingAnn.writeBaseIndex(
       e.filter(col("vec_id") % 10 =!= 0), "vec_id", "embedding", "label", dir)
     Similarity.ivfAssign(e.filter(col("vec_id") % 10 === 0), "vec_id",
-        "embedding", s.read.parquet(s"$dir/centroids"))
+        "embedding", s.read.parquet(
+          graft.streaming.Compaction.view(s, dir).path("centroids")))
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$dir/increments/batch=0")
   }
@@ -120,7 +121,8 @@ object ExtensionQueries {
     val e = Tables.embeddings(s, d)
     graft.streaming.StreamingAnn.writeBaseIndex(
       e.filter(col("vec_id") % 10 =!= 0), "vec_id", "embedding", "label", dir)
-    val frozen = s.read.parquet(s"$dir/centroids")
+    val frozen = s.read.parquet(
+      graft.streaming.Compaction.view(s, dir).path("centroids"))
     Similarity.ivfAssign(e.filter(col("vec_id") % 20 === 0), "vec_id",
         "embedding", frozen)
       .write.mode("overwrite").partitionBy("cell")
@@ -516,7 +518,7 @@ object ExtensionQueries {
       val rows = Seq(
         ("lex", baseRows(s"${t.lex.get}/postings", "base", "doc_id")),
         ("ann", baseRows(t.ann.get, "base", "vec_id")),
-        ("pq", baseRows(Compaction.view(s, t.pq.get).dirOrLegacy("codes"),
+        ("pq", baseRows(Compaction.view(s, t.pq.get).path("codes"),
           "base", "vec_id")),
         ("dedup", baseRows(t.dedup.get, "bands", "doc_id")),
         ("graph", baseRows(s"${t.graph.get}/vectors", "base", "vec_id")))
@@ -1332,8 +1334,8 @@ object ExtensionQueries {
     // ── CAPSTONE: the FULL index lifecycle in one oracle-checked query.
     //    Vector store on the streaming layout: base on 90% under its own
     //    label centroids, TWO frozen-centroid increments, the compaction
-    //    trigger folds them, a certain drift breach reclusters (the
-    //    marker-commit promote). Lexical store: base on 90%, two appended
+    //    trigger folds them, a certain drift breach reclusters (one
+    //    pointer-committed publish). Lexical store: base on 90%, two appended
     //    batches, trigger-folded. Then the fused hybrid serving query runs
     //    off both end-states — and the oracle derives the SAME answer from
     //    scratch in SQL (frozen assign ∪-distributes, folds are identities,
@@ -1352,8 +1354,8 @@ object ExtensionQueries {
         "the trigger must fold both lexical increments")
       graft.text.Retrieval.hybridRrfStored(s, ldir,
         StreamingAnn.readPostings(s, vdir),
-        // post-recluster: the legacy literal path still exists in grace
-        // but holds the OLD generation — resolve the live one
+        // post-recluster: the superseded centroids generation is still in
+        // grace — resolve the live one
         s.read.parquet(graft.streaming.Compaction
           .resolve(s, vdir, "centroids").get), Bm25Terms,
         e.filter(col("vec_id") < 10), "vec_id", "embedding",
@@ -1386,8 +1388,8 @@ object ExtensionQueries {
         "the trigger must fold both lexical increments")
       graft.text.Retrieval.hybridRrfStored(s, ldir,
         StreamingAnn.readPostings(s, vdir),
-        // post-recluster: the legacy literal path still exists in grace
-        // but holds the OLD generation — resolve the live one
+        // post-recluster: the superseded centroids generation is still in
+        // grace — resolve the live one
         s.read.parquet(graft.streaming.Compaction
           .resolve(s, vdir, "centroids").get), Bm25Terms,
         e.filter(col("vec_id") < 10), "vec_id", "embedding",
@@ -1488,10 +1490,10 @@ object ExtensionQueries {
     "q341_pq_erasure_audit" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
       val dir = Fixtures.mutableCopy("pq1", d)(buildPq1(s, d))
-      // compose the IVF-PQ store under the same root (both fixtures
-      // write the identical closed-form codebook, so the overlap is
-      // byte-equal to the sequential build this replaces)
-      Fixtures.copyInto("ivfpq", d, dir)(buildIvfPq(s, d))
+      // compose the IVF-PQ store under the same root: its build publishes
+      // the next generation there (both builds write the identical
+      // closed-form codebook)
+      buildIvfPq(s, d)(dir)
       graft.sim.PqIndex.deleteBatch(
         e.filter(col("vec_id") % 7 === 3).select("vec_id"), dir,
         batchId = 0L)

@@ -55,23 +55,8 @@ private[queries] object Fixtures {
     * shared build's. */
   def mutableCopy(key: String, sfDir: String)(build: String => Unit): String = {
     val dst = ExtensionQueries.scratchDir(s"graft_fx_${key}_mut")
-    copyInto(key, sfDir, dst)(build)
+    copyTree(Paths.get(shared(key, sfDir)(build)), Paths.get(dst))
     dst
-  }
-
-  /** Copy the shared build's tree INTO `dst` (which may already hold
-    * another fixture's copy — the composed-layout case, e.g. a flat PQ
-    * code table plus an IVF-PQ store under one root). A top-level child
-    * present in both is REPLACED wholesale, mirroring the
-    * `mode("overwrite")` semantics of the sequential Spark builds this
-    * composition stands in for — a merged directory would double parquet
-    * part files. */
-  def copyInto(key: String, sfDir: String, dst: String)(build: String => Unit): Unit = {
-    val src = Paths.get(shared(key, sfDir)(build))
-    using(Files.list(src))(_.forEach { child =>
-      deleteTree(Paths.get(dst).resolve(child.getFileName.toString))
-      copyTree(child, Paths.get(dst).resolve(child.getFileName.toString))
-    })
   }
 
   /** NIO directory streams hold OS directory handles until closed — a
@@ -86,9 +71,4 @@ private[queries] object Fixtures {
       if (Files.isDirectory(p)) Files.createDirectories(t)
       else Files.copy(p, t, StandardCopyOption.REPLACE_EXISTING): Unit
     })
-
-  private def deleteTree(p: Path): Unit =
-    if (Files.exists(p))
-      using(Files.walk(p))(_.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(q => Files.deleteIfExists(q): Unit))
 }

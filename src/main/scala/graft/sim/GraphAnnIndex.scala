@@ -22,13 +22,14 @@ import org.apache.spark.sql.functions._
   * the restatement unit, so one append rewrites |touched groups| of edge
   * state, never the graph.
   *
-  * Layout under `dir`:
+  * Layout under `dir` (two [[Compaction]] roots; `_v<K>` is the
+  * generation the root's pointer names):
   * {{{
-  *   meta/                      frozen graph geometry (dim, degree,
+  *   vectors/meta_v<K>          frozen graph geometry (dim, degree,
   *                              finePlanes, fineTables, hubMod, nGroups)
-  *   vectors/base, increments/  (vec_id, v, b_0..b_{T-1}, b_hub) — the
-  *                              union-distributive family contract
-  *   edges/base, increments/    (layer, grp, src, dst) DIRECTED edges;
+  *   vectors/base_v<K>, increments/  (vec_id, v, b_0..b_{T-1}, b_hub) —
+  *                              the union-distributive family contract
+  *   edges/base_v<K>, increments/  (layer, grp, src, dst) DIRECTED edges;
   *                              merge = LAST WRITER WINS per (layer, grp)
   *                              (each increment RESTATES whole groups; a
   *                              null-src sentinel row registers a group
@@ -51,16 +52,14 @@ object GraphAnnIndex {
                           fineTables: Int, hubMod: Int, nGroups: Int,
                           epoch: Int)
 
-  /** Meta resolution rides the VECTORS root's pointer when a rebuild has
-    * versioned it ([[rebuildIndex]] flips meta + vectors in ONE pointer
-    * commit — fresh plane geometry routing over stale bucket columns
-    * would corrupt every later restatement), falling back to the
-    * pre-rebuild literal `$dir/meta` layout. The `epoch` column is absent
+  /** Meta resolution rides the VECTORS root's pointer: meta lives beside
+    * the vector base, and [[rebuildIndex]] flips both in ONE pointer
+    * commit (fresh plane geometry routing over stale bucket columns
+    * would corrupt every later restatement). The `epoch` column is absent
     * from pre-epoch indexes and reads as 0 (the historical geometry). */
   private def readMeta(spark: SparkSession, dir: String): Meta = {
-    val p = Compaction.view(spark, s"$dir/vectors").dir("meta")
-      .getOrElse(s"$dir/meta")
-    val df = spark.read.parquet(p)
+    val df = spark.read.parquet(
+      Compaction.view(spark, s"$dir/vectors").path("meta"))
     val r = df.head()
     def gi(n: String) = r.getInt(r.fieldIndex(n))
     Meta(gi("dim"), gi("degree"), gi("fine_planes"), gi("fine_tables"),
@@ -156,8 +155,8 @@ object GraphAnnIndex {
       layerEdges(live, l, m, touched.map(_.getOrElse(l, Nil)))
     }.reduce(_.unionByName(_))
 
-  /** Write the base index over a corpus: frozen geometry in `meta/`, the
-    * bucket-annotated vectors, and the full directed edge set.
+  /** Write the base index over a corpus: frozen geometry in `meta` with
+    * the bucket-annotated vectors, and the full directed edge set.
     *
     * `nGroups` is FROZEN GEOMETRY — it caps the parallelism of every later
     * restatement and of [[readEdges]]'s last-writer-wins merge windows
@@ -183,14 +182,31 @@ object GraphAnnIndex {
       if (nGroups > 0) nGroups
       else deriveGroups(finePlanes, fineTables, corpus.count())
     val m = Meta(dim, degree, finePlanes, fineTables, hubMod, groups, epoch)
-    metaDf(spark, m)
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
     val vecs = Similarity.cut(withBuckets(corpus, id, emb, m),
       eager = false) // referenced once per layer below
-    vecs.write.mode("overwrite").parquet(s"$dir/vectors/base")
-    allLayerEdges(vecs, m, None)
-      .write.mode("overwrite").parquet(s"$dir/edges/base")
+    publishVectors(vecs, m, dir, -1L)
+    publishEdges(allLayerEdges(vecs, m, None), dir, -1L)
   }
+
+  /** Meta + bucket-annotated vector base as ONE generation of the vectors
+    * root, the base stamped with the folded watermark `wm` it subsumes. */
+  private def publishVectors(vecs: DataFrame, m: Meta, dir: String,
+                             wm: Long): Unit = {
+    val spark = vecs.sparkSession
+    Compaction.publish(spark, s"$dir/vectors", Seq("base", "meta")) { out =>
+      metaDf(spark, m)
+        .coalesce(1).write.mode("overwrite").parquet(out("meta"))
+      vecs.write.mode("overwrite").parquet(out("base"))
+      Compaction.stampWatermark(spark, out("base"), wm)
+    }
+  }
+
+  private def publishEdges(edges: DataFrame, dir: String, wm: Long): Unit =
+    Compaction.publish(edges.sparkSession, s"$dir/edges", Seq("base")) {
+      out =>
+        edges.write.mode("overwrite").parquet(out("base"))
+        Compaction.stampWatermark(edges.sparkSession, out("base"), wm)
+    }
 
   /** The live bucket-annotated vectors: base ∪ live increments, minus
     * tombstoned ids (broadcast anti-join). */
@@ -525,9 +541,8 @@ object GraphAnnIndex {
           .map(p => spark.read.parquet(p).select(vectorCols(m).map(col): _*))
           .reduce(_.unionByName(_)), dir, "vec_id")
     } { (df, out) => df.write.mode("overwrite").parquet(out) }
-    if (fv == 0 && Tombstones.needsVacuum(
-        spark.read.parquet(Compaction.resolve(spark, s"$dir/vectors", "base")
-          .getOrElse(s"$dir/vectors/base")), dir, "vec_id"))
+    if (fv == 0 && Compaction.resolve(spark, s"$dir/vectors", "base").exists(
+        b => Tombstones.needsVacuum(spark.read.parquet(b), dir, "vec_id")))
       Compaction.rewriteBase(spark, s"$dir/vectors")(df =>
         Tombstones.applyTo(df.select(vectorCols(m).map(col): _*), dir,
           "vec_id")) { (df, out) =>
@@ -665,7 +680,7 @@ object GraphAnnIndex {
     * membership from scratch.
     *
     * Atomicity: meta and the vector base flip TOGETHER in one
-    * [[Compaction.promote]] pointer commit (fresh plane geometry routing
+    * [[Compaction.publish]] pointer commit (fresh plane geometry routing
     * over stale bucket columns would corrupt every later restatement);
     * the edge base flips in its own root's commit immediately after,
     * with the whole rebuild serialized on the EDGES write lease — the
@@ -683,8 +698,6 @@ object GraphAnnIndex {
     Compaction.withWriteLease(spark, s"$dir/edges") {
       val m = readMeta(spark, dir)
       val vroot = s"$dir/vectors"; val eroot = s"$dir/edges"
-      Compaction.recoverPromote(spark, vroot)
-      Compaction.recoverPromote(spark, eroot)
       spark.catalog.refreshByPath(dir)
       val subsumedV = (Compaction.foldedWatermark(spark, vroot) +:
         Compaction.incrementIds(spark, vroot)).max
@@ -694,20 +707,14 @@ object GraphAnnIndex {
         readVectors(spark, dir).select("vec_id", "v"), eager = false)
       val m2 = Meta(m.dim, m.degree, m.finePlanes, m.fineTables, m.hubMod,
         deriveGroups(m.finePlanes, m.fineTables, live.count()), m.epoch + 1)
-      metaDf(spark, m2).coalesce(1)
-        .write.mode("overwrite").parquet(s"$vroot/meta_new")
-      withBuckets(live, "vec_id", "v", m2)
-        .write.mode("overwrite").parquet(s"$vroot/base_new")
-      Compaction.stampWatermark(spark, s"$vroot/base_new", subsumedV)
-      Compaction.promote(spark, vroot, Seq("base", "meta"))
+      publishVectors(withBuckets(live, "vec_id", "v", m2), m2, dir,
+        subsumedV)
       Compaction.gcIncrements(spark, vroot)
-      // re-read through the promoted pointer: the edge build must see the
+      // re-read through the committed pointer: the edge build must see the
       // NEW bucket columns (readMeta now resolves the epoch-bumped meta)
       val fresh = Similarity.cut(readVectors(spark, dir), eager = false)
-      allLayerEdges(fresh, m2, None)
-        .write.mode("overwrite").parquet(s"$eroot/base_new")
-      Compaction.stampWatermark(spark, s"$eroot/base_new", subsumedE)
-      Compaction.promoteHeld(spark, eroot, Seq("base"))
+      // the edges root's lease is already held (re-entrant publish)
+      publishEdges(allLayerEdges(fresh, m2, None), dir, subsumedE)
       Compaction.gcIncrements(spark, eroot)
       gcMarkers(spark, dir)
       spark.catalog.refreshByPath(dir)

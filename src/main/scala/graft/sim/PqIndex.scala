@@ -13,12 +13,13 @@ import org.apache.spark.sql.functions._
   * to a from-scratch encode of everything ingested (the q330 oracle
   * replays encode + ADC in SQL).
   *
-  * Layout under `dir`:
+  * Layout under `dir` (a [[graft.streaming.Compaction]] root; the code
+  * table is itself a root nested in its generation):
   * {{{
-  *   codebook/            (s, c, i, w) — the m×ksub×dsub codebook as a
+  *   codebook_v<K>/       (s, c, i, w) — the m×ksub×dsub codebook as a
   *                        long frame any engine can read back exactly
-  *   codes/base/          (vec_id, codes ARRAY<INT>)
-  *   codes/increments/batch=<id>/   idempotent per-batch landings
+  *   codes_v<K>/base_v<J>/          (vec_id, codes ARRAY<INT>)
+  *   codes_v<K>/increments/batch=<id>/   idempotent per-batch landings
   * }}}
   *
   * At 100 TB the point is the footprint: a dim-64 float vector is 256 B,
@@ -28,7 +29,7 @@ import org.apache.spark.sql.functions._
   * crash-safe with the watermark (replayed batches drop at the sink, at
   * read time, and at fold time), and a RETRAIN — where codebook AND codes
   * must flip together or every stored code decodes against the wrong
-  * centroids — rides the single-marker multi-directory promote. */
+  * centroids — is one multi-directory publish. */
 object PqIndex {
 
   /** Codebook as a long (s, c, i, w) frame — exact doubles, fixed order. */
@@ -51,7 +52,7 @@ object PqIndex {
 
   private def readCodebookFrom(
       v: Compaction.RootView): Array[Array[Array[Double]]] = {
-    val rows = v.spark.read.parquet(v.dirOrLegacy("codebook"))
+    val rows = v.spark.read.parquet(v.path("codebook"))
       .select("s", "c", "i", "w").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getDouble(3)))
     val m = rows.map(_._1).max + 1
@@ -66,12 +67,22 @@ object PqIndex {
   def writeIndex(corpus: DataFrame, id: String, emb: String,
                  codebooks: Array[Array[Array[Double]]], dir: String): Unit = {
     val spark = corpus.sparkSession
-    codebookDf(spark, codebooks).coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/codebook")
-    Similarity.pqEncode(corpus, id, emb, codebooks)
-      .select("vec_id", "codes")
-      .write.mode("overwrite").parquet(s"$dir/codes/base")
+    Compaction.publish(spark, dir, Seq("codebook", "codes")) { out =>
+      codebookDf(spark, codebooks).coalesce(1)
+        .write.mode("overwrite").parquet(out("codebook"))
+      publishCodes(Similarity.pqEncode(corpus, id, emb, codebooks),
+        out("codes"), -1L)
+    }
   }
+
+  /** Seed a fresh code-table root with `codes` as its base, stamped with
+    * the folded watermark `wm` it subsumes. */
+  private def publishCodes(codes: DataFrame, root: String, wm: Long): Unit =
+    Compaction.publish(codes.sparkSession, root, Seq("base")) { out =>
+      codes.select("vec_id", "codes")
+        .write.mode("overwrite").parquet(out("base"))
+      Compaction.stampWatermark(codes.sparkSession, out("base"), wm)
+    }
 
   /** Encode one batch under the STORED (frozen) codebook and land it as
     * its own increment — idempotent (a retried batch overwrites exactly
@@ -83,7 +94,7 @@ object PqIndex {
     // one view: the codebook generation and the codes tree the increment
     // lands in must match (a retrain flips them together)
     val v = Compaction.view(spark, dir)
-    val codes = v.dirOrLegacy("codes")
+    val codes = v.path("codes")
     if (Compaction.isFolded(spark, codes, batchId)) return
     Similarity.pqEncode(batch, id, emb, readCodebookFrom(v))
       .select("vec_id", "codes")
@@ -114,7 +125,7 @@ object PqIndex {
     * root view, then takes an inner view of that tree (folds version the
     * base within it; retrains version the tree itself at the root). */
   private def rawCodes(v: Compaction.RootView): DataFrame =
-    Compaction.view(v.spark, v.dirOrLegacy("codes"))
+    Compaction.view(v.spark, v.path("codes"))
       .read(Seq("vec_id", "codes")).getOrElse(
         sys.error(s"no PQ code table under ${v.root}"))
 
@@ -126,23 +137,20 @@ object PqIndex {
     * [[retrainIndex]]). */
   def erasureAudit(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.Tombstones
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val v = Compaction.view(spark, dir)
     // ONE lazy plan (broadcast cross join of one-row aggregates) — a
     // single action when consumed, unionable into the one-job
     // five-family attest (see LexIndex.erasureAudit)
     val flat =
-      if (Compaction.view(spark, v.dirOrLegacy("codes")).dir("base").isDefined)
+      if (v.dir("codes").isDefined)
         Tombstones.hiddenRowCountDf(rawCodes(v), dir, "vec_id",
           "code_rows_hidden")
       else spark.range(1).select(lit(0L).as("code_rows_hidden"))
-    val postingsDir = v.dir("postings")
-    val ivf = postingsDir match {
-      case Some(p) if fs.exists(new org.apache.hadoop.fs.Path(p)) =>
+    val ivf = v.dir("postings") match {
+      case Some(p) =>
         Tombstones.hiddenRowCountDf(spark.read.parquet(p), dir, "vec_id",
           "posting_rows_hidden")
-      case _ => spark.range(1).select(lit(0L).as("posting_rows_hidden"))
+      case None => spark.range(1).select(lit(0L).as("posting_rows_hidden"))
     }
     Tombstones.countDf(spark, dir, "n_tombstones")
       .crossJoin(broadcast(flat))
@@ -191,25 +199,26 @@ object PqIndex {
   def compactIndex(spark: SparkSession, dir: String): Int = {
     import graft.streaming.Tombstones
     Tombstones.compact(spark, dir)
-    val codes = Compaction.view(spark, dir).dirOrLegacy("codes")
-    val folded = Compaction.foldIncrements(spark, codes) {
-      (base, incs) =>
-        Tombstones.applyTo((base.toSeq ++ incs)
-          .map(p => spark.read.parquet(p).select("vec_id", "codes"))
-          .reduce(_.unionByName(_)), dir, "vec_id")
-    } { (df, out) => df.write.mode("overwrite").parquet(out) }
     // an IVF-PQ-only dir (postings, no codes tree) can reach here via the
-    // shared tombstone root — the vacuum arm must no-op on the absent
-    // flat table rather than throw on the missing path
-    val codesBase = Compaction.resolve(spark, codes, "base")
-    if (folded == 0 && codesBase.isDefined &&
-        Tombstones.needsVacuum(
-          spark.read.parquet(codesBase.get), dir, "vec_id"))
-      Compaction.rewriteBase(spark, codes)(df =>
-        Tombstones.applyTo(df.select("vec_id", "codes"), dir, "vec_id")) {
-        (df, out) => df.write.mode("overwrite").parquet(out)
-      }
-    folded
+    // shared tombstone root — there is no flat table to fold or vacuum
+    Compaction.resolve(spark, dir, "codes") match {
+      case None => 0
+      case Some(codes) =>
+        val write = (df: DataFrame, out: String) =>
+          df.write.mode("overwrite").parquet(out)
+        val folded = Compaction.foldIncrements(spark, codes) {
+          (base, incs) =>
+            Tombstones.applyTo((base.toSeq ++ incs)
+              .map(p => spark.read.parquet(p).select("vec_id", "codes"))
+              .reduce(_.unionByName(_)), dir, "vec_id")
+        } (write)
+        if (folded == 0 && Compaction.resolve(spark, codes, "base").exists(
+            b => Tombstones.needsVacuum(spark.read.parquet(b), dir, "vec_id")))
+          Compaction.rewriteBase(spark, codes)(df =>
+            Tombstones.applyTo(df.select("vec_id", "codes"), dir,
+              "vec_id"))(write)
+        folded
+    }
   }
 
   /** Physically erase tombstoned vectors from the IVF-PQ posting lists —
@@ -219,9 +228,8 @@ object PqIndex {
   def vacuumIvfPq(spark: SparkSession, dir: String): Unit = {
     import graft.streaming.Tombstones
     Tombstones.compact(spark, dir)
-    if (Tombstones.needsVacuum(
-        spark.read.parquet(Compaction.resolve(spark, dir, "postings")
-          .getOrElse(s"$dir/postings")), dir, "vec_id"))
+    if (Compaction.resolve(spark, dir, "postings").exists(p =>
+        Tombstones.needsVacuum(spark.read.parquet(p), dir, "vec_id")))
       Compaction.rewriteBase(spark, dir, "postings")(df =>
         Tombstones.applyTo(df.select("vec_id", "codes", "cell"), dir,
           "vec_id")) { (df, out) =>
@@ -235,18 +243,16 @@ object PqIndex {
     * tombstone pressure routes to [[vacuumIvfPq]] instead. */
   def compactIndexIfNeeded(spark: SparkSession, dir: String,
                            maxIncrements: Int): Int = {
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val codes = Compaction.view(spark, dir).dirOrLegacy("codes")
-    val hasCodes = fs.exists(new org.apache.hadoop.fs.Path(codes))
-    if (!hasCodes) {
-      if (graft.streaming.Tombstones.incrementCount(spark, dir) > maxIncrements)
-        vacuumIvfPq(spark, dir)
-      0
-    } else if (Compaction.incrementCount(spark, codes) > maxIncrements ||
-        graft.streaming.Tombstones.incrementCount(spark, dir) > maxIncrements)
-      compactIndex(spark, dir)
-    else 0
+    val tombs = graft.streaming.Tombstones.incrementCount(spark, dir)
+    Compaction.resolve(spark, dir, "codes") match {
+      case None =>
+        if (tombs > maxIncrements) vacuumIvfPq(spark, dir)
+        0
+      case Some(codes) =>
+        if (Compaction.incrementCount(spark, codes) > maxIncrements ||
+            tombs > maxIncrements) compactIndex(spark, dir)
+        else 0
+    }
   }
 
   /** CODE-USAGE DRIFT of the maintained index — the aging monitor for a
@@ -264,8 +270,7 @@ object PqIndex {
     * sum (decimal addition is associative — partition-order-free) — the
     * q331 oracle recomputes it in SQL term for term. */
   def codeUsageDrift(spark: SparkSession, dir: String): DataFrame = {
-    val codes = Compaction.view(spark, dir).dirOrLegacy("codes")
-    val cv = Compaction.view(spark, codes)
+    val cv = Compaction.view(spark, Compaction.view(spark, dir).path("codes"))
     def usage(df: DataFrame, name: String): DataFrame = {
       val long = df.select(posexplode(col("codes")).as(Seq("s", "code")))
       val tot = long.groupBy("s").agg(count(lit(1)).as(s"n_$name"))
@@ -315,17 +320,13 @@ object PqIndex {
     * `corpus` ([[Similarity.pqTrain]]) — the recluster arm of the PQ
     * lifecycle. Codebook and codes MUST flip together (every stored code
     * is an index into ITS codebook; mixing generations decodes garbage),
-    * so the swap is [[Compaction.promote]]'s single-marker commit over
-    * both directories; the subsumed increments drop under the watermark
-    * stamped into the new base. Run between streams. */
+    * so both land as one [[Compaction.publish]]; the replacement code
+    * tree holds only the new base, stamped with the watermark of the
+    * increments it subsumes. Run between streams. */
   def retrainIndex(spark: SparkSession, dir: String, corpus: DataFrame,
                    id: String, emb: String, m: Int, ksub: Int,
                    maxIter: Int = 10): Unit = {
-    Compaction.recoverPromote(spark, dir)
-    val codes = Compaction.view(spark, dir).dirOrLegacy("codes")
-    // pre-versioning fold crash leftovers live under the codes tree as
-    // base_old/base_compact — recover at that root
-    Compaction.recover(spark, codes)
+    val codes = Compaction.view(spark, dir).path("codes")
     spark.catalog.refreshByPath(dir)
     val prevWm = Compaction.foldedWatermark(spark, codes)
     val subsumedWm =
@@ -336,16 +337,15 @@ object PqIndex {
     val live = graft.streaming.Tombstones.applyTo(corpus, dir, id)
     val fresh = Similarity.pqTrain(live.select(col(id), col(emb)),
       emb, m, ksub, maxIter = maxIter)
-    codebookDf(spark, fresh).coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/codebook_new")
-    // the replacement codes tree contains ONLY the new base: the old
-    // increments encode against the OLD codebook and are subsumed by the
-    // re-encode, so they die with `codes_old` in the same promote
-    Similarity.pqEncode(live, id, emb, fresh)
-      .select("vec_id", "codes")
-      .write.mode("overwrite").parquet(s"$dir/codes_new/base")
-    Compaction.stampWatermark(spark, s"$dir/codes_new/base", subsumedWm)
-    Compaction.promote(spark, dir, Seq("codebook", "codes"))
+    Compaction.publish(spark, dir, Seq("codebook", "codes")) { out =>
+      codebookDf(spark, fresh).coalesce(1)
+        .write.mode("overwrite").parquet(out("codebook"))
+      // the replacement codes tree contains ONLY the new base: the old
+      // increments encode against the OLD codebook and are subsumed by the
+      // re-encode, so they die with the old tree's generation
+      publishCodes(Similarity.pqEncode(live, id, emb, fresh), out("codes"),
+        subsumedWm)
+    }
     spark.catalog.refreshByPath(dir)
   }
 
@@ -364,18 +364,21 @@ object PqIndex {
                  dir: String): Unit = {
     val spark = corpus.sparkSession
     val cents = Similarity.ivfCentroids(corpus, cell, emb)
-    cents.write.mode("overwrite").parquet(s"$dir/centroids")
-    codebookDf(spark, codebooks).coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/codebook")
-    // carry `cell` THROUGH the encode: the assignment (broadcast
-    // centroid cross-join + per-vector rank window over the whole
-    // corpus) runs once and no corpus-wide self-join re-attaches the
-    // cell — one pass over the most expensive stage of the build
-    Similarity.pqEncode(Similarity.ivfAssign(corpus, id, emb, cents),
-        "vec_id", "v", codebooks, carry = Seq("cell"))
-      .select("vec_id", "codes", "cell")
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$dir/postings")
+    Compaction.publish(spark, dir,
+        Seq("centroids", "codebook", "postings")) { out =>
+      cents.write.mode("overwrite").parquet(out("centroids"))
+      codebookDf(spark, codebooks).coalesce(1)
+        .write.mode("overwrite").parquet(out("codebook"))
+      // carry `cell` THROUGH the encode: the assignment (broadcast
+      // centroid cross-join + per-vector rank window over the whole
+      // corpus) runs once and no corpus-wide self-join re-attaches the
+      // cell — one pass over the most expensive stage of the build
+      Similarity.pqEncode(Similarity.ivfAssign(corpus, id, emb, cents),
+          "vec_id", "v", codebooks, carry = Seq("cell"))
+        .select("vec_id", "codes", "cell")
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(out("postings"))
+    }
   }
 
   /** Search the IVF-PQ store: route each query to its `nProbe` nearest
@@ -420,13 +423,13 @@ object PqIndex {
     val v = Compaction.view(spark, dir)
     for (p <- pred if bruteThreshold > 0) {
       val surv = graft.streaming.Tombstones.applyTo(
-        spark.read.parquet(v.dirOrLegacy("postings")), dir, "vec_id")
+        spark.read.parquet(v.path("postings")), dir, "vec_id")
         .filter(p)
       if (surv.limit(bruteThreshold + 1).count() <= bruteThreshold)
         return Similarity.annPq(surv.select("vec_id", "codes"),
           readCodebookFrom(v), queries, id, emb, k)
     }
-    val cents = spark.read.parquet(v.dirOrLegacy("centroids"))
+    val cents = spark.read.parquet(v.path("centroids"))
     val routed = queries.select(col(id).as("q_id"),
         Similarity.asDouble(emb).as("qv"))
       .crossJoin(broadcast(cents))
@@ -441,7 +444,7 @@ object PqIndex {
     val routedLut = routed
       .join(Similarity.pqLutFrame(queries, id, emb, cb), "q_id")
     val cand = pred.foldLeft(graft.streaming.Tombstones.applyTo(
-        spark.read.parquet(v.dirOrLegacy("postings")), dir, "vec_id"))(_.filter(_))
+        spark.read.parquet(v.path("postings")), dir, "vec_id"))(_.filter(_))
       .filter(col("cell").isInCollection(cells))
       .join(broadcast(routedLut), col("cell") === col("cid"))
       .filter(col("vec_id") =!= col("q_id"))
@@ -475,8 +478,8 @@ object PqIndex {
     // no LIVE increments (e.g. right after compactIndexIfNeeded in
     // the documented maintenance loop): nothing new to compare the base
     // against — not drifted, not an error
-    if (Compaction.incrementCount(spark,
-        Compaction.view(spark, dir).dirOrLegacy("codes")) == 0) return false
+    if (Compaction.resolve(spark, dir, "codes")
+        .forall(Compaction.incrementCount(spark, _) == 0)) return false
     val breached = codeUsageDrift(spark, dir)
       .filter(col("l1_drift") > maxL1).limit(1).count() > 0
     if (breached) retrainIndex(spark, dir, corpus, id, emb, m, ksub)

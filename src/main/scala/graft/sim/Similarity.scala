@@ -347,12 +347,14 @@ object Similarity {
     * open, the [[graft.text.Dedup.writeSignatureIndex]] contract applied
     * to vectors), centroids land beside them as the frozen quantizer. */
   def writeIvfIndex(assigned: DataFrame, centroids: DataFrame,
-                    dir: String): Unit = {
-    centroids.write.mode("overwrite").parquet(s"$dir/centroids")
-    assigned.select(col("vec_id"), col("v"), col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$dir/postings")
-  }
+                    dir: String): Unit =
+    graft.streaming.Compaction.publish(assigned.sparkSession, dir,
+        Seq("centroids", "postings")) { out =>
+      centroids.write.mode("overwrite").parquet(out("centroids"))
+      assigned.select(col("vec_id"), col("v"), col("cell"))
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(out("postings"))
+    }
 
   /** Incremental maintenance: assign a new batch to the STORED (frozen)
     * centroids and APPEND to the cell-partitioned posting lists — no
@@ -369,10 +371,10 @@ object Similarity {
     // generation is snapshot-safe for readers — their captured listing
     // only ever misses the newest rows, it never chases deleted files.
     val v = graft.streaming.Compaction.view(batch.sparkSession, dir)
-    val cents = batch.sparkSession.read.parquet(v.dirOrLegacy("centroids"))
+    val cents = batch.sparkSession.read.parquet(v.path("centroids"))
     ivfAssign(batch, id, emb, cents)
       .write.mode("append").partitionBy("cell")
-      .parquet(v.dirOrLegacy("postings"))
+      .parquet(v.path("postings"))
   }
 
   /** DELETE vectors from a stored index — the takedown arm
@@ -397,8 +399,8 @@ object Similarity {
     // together; resolving each separately could mix generations
     val v = graft.streaming.Compaction.view(spark, dir)
     (graft.streaming.Tombstones.applyTo(
-        spark.read.parquet(v.dirOrLegacy("postings")), dir, "vec_id"),
-      spark.read.parquet(v.dirOrLegacy("centroids")))
+        spark.read.parquet(v.path("postings")), dir, "vec_id"),
+      spark.read.parquet(v.path("centroids")))
   }
 
   /** RECLUSTER a stored index — the arm [[ivfCellDrift]] triggers: when
@@ -411,12 +413,11 @@ object Similarity {
     * vector re-assigns to the nearest new centroid and the posting lists
     * rewrite cell-partitioned. Centroids and postings must flip TOGETHER —
     * fresh centroids routing over old posting lists silently degrades
-    * every search — so the swap is [[graft.streaming.Compaction.promote]]'s
-    * single-marker commit: both `_new` siblings are written in full, ONE
-    * atomic marker create is the commit point, renames are checked, and an
-    * interrupted swap rolls forward (post-marker) or back (pre-marker) on
-    * the next maintenance entry. A crash leaves either the old index or
-    * the new index readable — as a SET — never a mix, never neither.
+    * every search — so both land as ONE
+    * [[graft.streaming.Compaction.publish]]: written in full as a new
+    * generation, made live by a single pointer commit. A crash leaves
+    * either the old index or the new index readable — as a SET — never a
+    * mix, never neither.
     *
     * Scale shape: one postings scan for the means (cells×dim aggregate),
     * one for the re-assign (broadcast centroids, no shuffle), one
@@ -424,20 +425,21 @@ object Similarity {
     * pairwise work anywhere. */
   def reclusterIvfIndex(spark: org.apache.spark.sql.SparkSession,
                         dir: String): Unit = {
-    graft.streaming.Compaction.recoverPromote(spark, dir)
     spark.catalog.refreshByPath(dir)
     // tombstones apply through readIvfIndex: the rebuilt base is written
     // WITHOUT deleted vectors (physical erasure), and the fresh centroids
     // are means over live members only
     val members = readIvfIndex(spark, dir)._1
       .select(col("vec_id"), col("cell"), col("v"))
-    val fresh = ivfCentroids(members, "cell", "v")
-    fresh.write.mode("overwrite").parquet(s"$dir/centroids_new")
-    ivfAssign(members.select(col("vec_id"), col("v")), "vec_id", "v",
-        spark.read.parquet(s"$dir/centroids_new"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$dir/postings_new")
-    graft.streaming.Compaction.promote(spark, dir, Seq("centroids", "postings"))
+    graft.streaming.Compaction.publish(spark, dir,
+        Seq("centroids", "postings")) { out =>
+      ivfCentroids(members, "cell", "v")
+        .write.mode("overwrite").parquet(out("centroids"))
+      ivfAssign(members.select(col("vec_id"), col("v")), "vec_id", "v",
+          spark.read.parquet(out("centroids")))
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(out("postings"))
+    }
     spark.catalog.refreshByPath(dir)
   }
 
@@ -451,9 +453,8 @@ object Similarity {
                      dir: String): Unit = {
     import graft.streaming.{Compaction, Tombstones}
     Tombstones.compact(spark, dir)
-    if (Tombstones.needsVacuum(
-        spark.read.parquet(Compaction.resolve(spark, dir, "postings")
-          .getOrElse(s"$dir/postings")), dir, "vec_id"))
+    if (Compaction.resolve(spark, dir, "postings").exists(p =>
+        Tombstones.needsVacuum(spark.read.parquet(p), dir, "vec_id")))
       Compaction.rewriteBase(spark, dir, "postings")(df =>
         Tombstones.applyTo(df.select("vec_id", "v", "cell"), dir,
           "vec_id")) { (df, out) =>

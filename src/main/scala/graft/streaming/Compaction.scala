@@ -6,9 +6,11 @@ import org.apache.spark.sql.functions.col
 
 /** Shared maintenance protocol for the maintained parquet artifacts
   * ([[StreamingAnn]] posting lists, [[StreamingSketch]] count-min and
-  * DDSketch counters, [[StreamingLm]] bigram counts,
-  * [[graft.text.LexIndex]] postings/doclens, [[graft.text.Dedup]]
-  * signature bands, [[graft.sim.PqIndex]] code tables, [[Tombstones]]).
+  * DDSketch counters, [[StreamingLm]] bigram counts, [[StreamingMerge]]
+  * snapshots, [[graft.text.LexIndex]] postings/doclens,
+  * [[graft.text.Dedup]] signature bands, [[graft.sim.PqIndex]] code
+  * tables, [[graft.sim.GraphAnnIndex]] vectors/edges, the IVF store of
+  * [[graft.sim.Similarity]], [[Tombstones]]).
   *
   * Why it exists: every foreachBatch sink in this family lands one
   * `increments/batch=<id>` directory per micro-batch, forever — correct
@@ -21,33 +23,34 @@ import org.apache.spark.sql.functions.col
   *
   * == Versioned roots: snapshot isolation for readers ==
   *
-  * Maintenance never mutates or renames a directory a reader could be
-  * holding. Instead each root carries a POINTER:
+  * Nothing mutates or renames a directory a reader could be holding.
+  * Every maintained root has ONE layout:
   * {{{
   *   <root>/_pointer/p<NNNN>       one file per committed generation,
   *                                 lines of "name<TAB>versioned-dir"
   *   <root>/<name>_v<K>            immutable content generations
-  *   <root>/<name>                 the pre-versioning (legacy) layout —
-  *                                 still resolvable as a fallback
+  *   <root>/increments/batch=<id>  per-batch landings
   * }}}
   * A reader resolves the pointer ONCE per query ([[view]]): the highest
   * `p<N>` file names the live directory of every maintained artifact
-  * under the root; names absent from the pointer fall back to the legacy
-  * literal path. Maintenance writes a NEW `<name>_v<K>` directory in
-  * full, then commits by renaming a finished pointer file into place —
-  * one atomic create is the commit point; a crash before it leaves
-  * uncommitted garbage (reaped by the next op's GC), a crash after it
-  * leaves the new generation fully live. Multi-directory flips
-  * (recluster: centroids + postings; retrain: codebook + codes) commit in
-  * ONE pointer file, so the artifact SET is always all-old or all-new.
+  * under the root. Every write — the seed build of a fresh index as much
+  * as a fold, vacuum or rebuild — goes through [[publish]]: the new
+  * `<name>_v<K>` directories are written in full, then a finished pointer
+  * file is renamed into place — one atomic create is the commit point. A
+  * crash before it leaves unreferenced `_v<K>` directories no reader
+  * resolves (reaped by GC, overwritten by the next writer); a crash after
+  * it leaves the new generation fully live, its GC done by the next op.
+  * Multi-directory flips (recluster: centroids + postings; retrain:
+  * codebook + codes; rebuild: meta + base) commit in ONE pointer file, so
+  * the artifact SET is always all-old or all-new. A fresh root starts at
+  * generation 1. No staging directory and no recovery pass exist.
   *
   * == Grace period ==
   *
-  * GC keeps the directories referenced by the LAST TWO pointers (plus the
-  * legacy dirs until two versioned generations supersede them), and keeps
-  * every increment directory whose batch id exceeds the OLDEST in-grace
-  * base's folded watermark. So a reader that resolved the previous
-  * generation keeps a complete, consistent view — base plus the
+  * GC keeps the directories referenced by the LAST TWO pointers, and
+  * keeps every increment directory whose batch id exceeds the OLDEST
+  * in-grace base's folded watermark. So a reader that resolved the
+  * previous generation keeps a complete, consistent view — base plus the
   * increments that base has not folded — throughout the next maintenance
   * op. The isolation contract: a query is safe so long as it finishes
   * before TWO subsequent maintenance ops land on the same root (at any
@@ -55,7 +58,7 @@ import org.apache.spark.sql.functions.col
   * interleaves reader execution with concurrent fold/recluster/vacuum on
   * all four index families to pin exactly this.
   *
-  * == Watermarks (unchanged from the pre-versioned protocol) ==
+  * == Watermarks ==
   *
   * The folded-batch watermark is stamped INSIDE each base generation as
   * `_folded_watermark` (hidden from parquet readers) and travels with the
@@ -65,15 +68,10 @@ import org.apache.spark.sql.functions.col
   * owns. Because watermark and content commit together, replay is
   * single-count in every crash state.
   *
-  * Single-writer contract: maintenance ops (fold / vacuum / promote) on
+  * Single-writer contract: maintenance ops (fold / vacuum / publish) on
   * one root must not run concurrently with each other — run them between
   * streams (this family's sinks use AvailableNow triggers, which
   * terminate between runs). Readers need no coordination at all.
-  *
-  * [[recover]] / [[recoverPromote]] remain solely to converge debris of
-  * the PRE-versioning rename-swap protocol (`base_old` / `base_compact` /
-  * `_promote_pending`) left by an upgrade mid-crash; versioned operation
-  * never creates those states.
   */
 private[graft] object Compaction {
 
@@ -89,12 +87,20 @@ private[graft] object Compaction {
 
   // ─────────────────────────────── write lease ──
 
+  /** Roots whose lease the current thread holds — a nested acquisition
+    * by the holder (a rebuild publishing into the root it serializes on)
+    * runs its body under the outer lease. */
+  private val heldLeases = new ThreadLocal[Set[String]] {
+    override def initialValue(): Set[String] = Set.empty
+  }
+
   /** Run `body` holding the root's exclusive MAINTENANCE LEASE — the
     * mechanical form of the single-writer contract: a second maintenance
-    * op (fold / vacuum / promote / graph restate) on the same root fails
+    * op (fold / vacuum / publish / graph restate) on the same root fails
     * fast with a clear error instead of racing the pointer commit (the
     * `commitPointer` expect-check would catch the race only at commit
-    * time, after both writers burned their rewrite).
+    * time, after both writers burned their rewrite). Re-entrant within
+    * the holding thread.
     *
     * Implementation: one create-exclusive `_lease` file under the root
     * (atomic on HDFS and local FS), holder token = host:pid:nonce, released
@@ -114,7 +120,8 @@ private[graft] object Compaction {
   private[graft] def withWriteLease[T](spark: SparkSession, root: String)
                                       (body: => T): T = {
     val fs = fsFor(spark, root)
-    if (!fs.exists(new Path(root))) return body
+    val key = new Path(root).toString
+    if (heldLeases.get()(key) || !fs.exists(new Path(root))) return body
     val p = new Path(s"$root/_lease")
     val ttlMs = (spark.conf.get("spark.graft.leaseTtlMinutes", "60")
       .toDouble * 60000).toLong
@@ -150,37 +157,36 @@ private[graft] object Compaction {
       }
     try out.write(token.getBytes("UTF-8"))
     finally out.close()
+    heldLeases.set(heldLeases.get() + key)
     try body
-    finally if (readLease() == token) fs.delete(p, false): Unit
+    finally {
+      heldLeases.set(heldLeases.get() - key)
+      if (readLease() == token) fs.delete(p, false): Unit
+    }
   }
 
   // ─────────────────────────────── pointer machinery ──
 
   /** An immutable resolution of a maintained root, taken ONCE — every
     * directory a single query touches must come from the same view, or a
-    * concurrent multi-directory promote could hand it mixed generations
+    * concurrent multi-directory publish could hand it mixed generations
     * (fresh centroids over stale posting lists). Cheap: one directory
     * listing of `_pointer/`. */
   final class RootView private[Compaction] (
       val spark: SparkSession, val root: String,
-      private[Compaction] val ptrId: Long,
       private[Compaction] val mapping: Map[String, String]) {
 
     private val fs = fsFor(spark, root)
 
-    /** The live directory for `name`: the pointer's generation when one
-      * is committed, else the legacy literal `<root>/<name>` if present. */
+    /** The live directory for `name`; None when no committed generation
+      * names it. */
     def dir(name: String): Option[String] =
-      mapping.get(name).map(d => s"$root/$d").orElse {
-        val legacy = new Path(s"$root/$name")
-        if (fs.exists(legacy)) Some(legacy.toString) else None
-      }
+      mapping.get(name).map(d => s"$root/$d")
 
-    /** [[dir]] with the legacy literal as the last resort even when the
-      * directory does not exist — callers that would rather surface
-      * Spark's own path-not-found than an Option. */
-    def dirOrLegacy(name: String): String =
-      dir(name).getOrElse(s"$root/$name")
+    /** [[dir]] for a name the index cannot be read without. */
+    def path(name: String): String = dir(name).getOrElse(
+      throw new IllegalStateException(
+        s"no committed generation of '$name' under $root"))
 
     /** The folded watermark stamped inside [[dir]](name); -1 when the
       * directory (or the stamp) is absent. */
@@ -191,22 +197,11 @@ private[graft] object Compaction {
       * base generation ∪ increments above ITS watermark. None when
       * neither exists. `cols` also prunes the increment scan's schema
       * (partition column `batch` is dropped unless requested). */
-    def read(cols: Seq[String], baseName: String = "base"): Option[DataFrame] = {
-      val basePath = dir(baseName)
-      val wm = basePath.map(d => readWm(fs, new Path(d))).getOrElse(-1L)
-      val incP = new Path(s"$root/increments")
-      val base = basePath.map(p =>
-        spark.read.parquet(p).select(cols.map(col): _*))
-      val inc =
-        if (fs.exists(incP) && incrementIds(spark, root).exists(_ > wm))
-          Some(spark.read.parquet(incP.toString)
-            .filter(col("batch") > wm).select(cols.map(col): _*))
-        else None
-      (base, inc) match {
+    def read(cols: Seq[String], baseName: String = "base"): Option[DataFrame] =
+      (readBase(cols, baseName), readIncrements(cols, baseName)) match {
         case (Some(b), Some(i)) => Some(b.unionByName(i))
         case (b, i)             => b.orElse(i)
       }
-    }
 
     /** The base generation alone (no increments) — drift monitors compare
       * it against [[readIncrements]]. */
@@ -228,8 +223,10 @@ private[graft] object Compaction {
 
   /** Resolve a root's pointer ONCE. See [[RootView]]. */
   def view(spark: SparkSession, root: String): RootView = {
-    val (id, m) = latestPointer(fsFor(spark, root), root)
-    new RootView(spark, root, id, m)
+    val fs = fsFor(spark, root)
+    new RootView(spark, root,
+      pointerIds(fs, root).lastOption.map(readPointer(fs, root, _))
+        .getOrElse(Map.empty))
   }
 
   /** The live directory for `name` under `root` (one-shot [[view]]).
@@ -238,22 +235,25 @@ private[graft] object Compaction {
   def resolve(spark: SparkSession, root: String, name: String): Option[String] =
     view(spark, root).dir(name)
 
-  /** (pointer id, name→dir map); (0, empty) when the root is unversioned. */
-  private def latestPointer(fs: FileSystem,
-                            root: String): (Long, Map[String, String]) = {
+  /** Committed generation ids under `root`, ascending; empty before the
+    * first commit. */
+  private def pointerIds(fs: FileSystem, root: String): Seq[Long] = {
     val dir = new Path(s"$root/$PtrDir")
-    if (!fs.exists(dir)) return (0L, Map.empty)
-    val ids = fs.listStatus(dir).map(_.getPath.getName)
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).map(_.getPath.getName)
       .filter(n => n.startsWith("p") && n.drop(1).forall(_.isDigit))
-      .map(_.drop(1).toLong)
-    if (ids.isEmpty) return (0L, Map.empty)
-    val id = ids.max
-    val in = fs.open(new Path(dir, ptrName(id)))
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().filter(_.nonEmpty).toList finally in.close()
-    (id, lines.map { l =>
-      val Array(k, v) = l.split("\t", 2); k -> v
-    }.toMap)
+      .map(_.drop(1).toLong).toSeq.sorted
+  }
+
+  /** The name → versioned-dir map committed as generation `id`. */
+  private def readPointer(fs: FileSystem, root: String,
+                          id: Long): Map[String, String] = {
+    val in = fs.open(new Path(s"$root/$PtrDir/${ptrName(id)}"))
+    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+      .filter(_.nonEmpty).map { l =>
+        val Array(k, v) = l.split("\t", 2); k -> v
+      }.toMap
+    finally in.close()
   }
 
   private def ptrName(id: Long): String = f"p$id%012d"
@@ -267,11 +267,14 @@ private[graft] object Compaction {
                             updates: Map[String, String],
                             expect: Long): Unit = {
     val fs = fsFor(spark, root)
-    val (id, cur) = latestPointer(fs, root)
+    val ids = pointerIds(fs, root)
+    val id = ids.lastOption.getOrElse(0L)
     require(id + 1 == expect,
       s"pointer commit at $root: expected generation $expect but the " +
         s"latest is $id — a concurrent maintenance op ran (single-writer " +
         "contract violated)")
+    val cur = if (ids.isEmpty) Map.empty[String, String]
+              else readPointer(fs, root, id)
     val dir = new Path(s"$root/$PtrDir")
     fs.mkdirs(dir)
     val tmp = new Path(dir, s".tmp_${ptrName(expect)}")
@@ -287,7 +290,7 @@ private[graft] object Compaction {
   /** The generation id the next commit will use; also the `_v<K>` suffix
     * of the directories that commit publishes. */
   private def nextGenId(fs: FileSystem, root: String): Long =
-    latestPointer(fs, root)._1 + 1
+    pointerIds(fs, root).lastOption.getOrElse(0L) + 1
 
   private val VersionedDir = "^(.+)_v(\\d+)$".r
 
@@ -305,38 +308,29 @@ private[graft] object Compaction {
   private def agedOut(fs: FileSystem, p: Path, grace: Long): Boolean =
     System.currentTimeMillis - fs.getFileStatus(p).getModificationTime >= grace
 
-  /** Reap everything outside the grace window: pointer files older than
-    * the previous generation, `_v<K>` directories referenced by no kept
-    * pointer (including uncommitted crash leftovers), and legacy
-    * directories superseded in EVERY kept pointer — each only once it is
-    * also older than the wall-clock floor ([[graceMs]]). Never touches
-    * `increments/`, `tombstones/`, `meta`, or any live generation. */
+  /** The pointers in grace: the last two plus any older one still inside
+    * the wall-clock floor (a reader may have resolved it). */
+  private def keptPointers(fs: FileSystem, root: String,
+                           grace: Long): Seq[Long] = {
+    val ids = pointerIds(fs, root)
+    val last2 = ids.takeRight(2).toSet
+    ids.filter(i => last2(i) ||
+      !agedOut(fs, new Path(s"$root/$PtrDir/${ptrName(i)}"), grace))
+  }
+
+  /** Reap everything outside the grace window: pointer files no longer
+    * kept and `_v<K>` directories referenced by no kept pointer
+    * (including uncommitted crash leftovers) — each only once it is also
+    * older than the wall-clock floor ([[graceMs]]). Never touches
+    * `increments/`, `tombstones/`, or any live generation. */
   private def gcVersions(spark: SparkSession, root: String): Unit = {
     val fs = fsFor(spark, root)
     val grace = graceMs(spark)
-    val dir = new Path(s"$root/$PtrDir")
-    if (!fs.exists(dir)) return
-    val ids = fs.listStatus(dir).map(_.getPath.getName)
-      .filter(n => n.startsWith("p") && n.drop(1).forall(_.isDigit))
-      .map(_.drop(1).toLong).sorted
-    if (ids.isEmpty) return
-    val last2 = ids.takeRight(2).toSet
-    // kept = the last two pointers plus any older one still inside the
-    // wall-clock floor (a reader may have resolved it)
-    val kept = ids.filter(i => last2(i) ||
-      !agedOut(fs, new Path(dir, ptrName(i)), grace))
-    ids.filterNot(kept.contains)
-      .foreach(i => fs.delete(new Path(dir, ptrName(i)), false))
-    def mapOf(id: Long): Map[String, String] = {
-      val in = fs.open(new Path(dir, ptrName(id)))
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.nonEmpty).map { l =>
-          val Array(k, v) = l.split("\t", 2); k -> v
-        }.toMap
-      finally in.close()
-    }
-    val keptMaps = kept.map(mapOf)
-    val referenced = keptMaps.flatMap(_.values).toSet
+    val kept = keptPointers(fs, root, grace)
+    if (kept.isEmpty) return
+    pointerIds(fs, root).filterNot(kept.contains).foreach(i =>
+      fs.delete(new Path(s"$root/$PtrDir/${ptrName(i)}"), false))
+    val referenced = kept.flatMap(readPointer(fs, root, _).values).toSet
     fs.listStatus(new Path(root)).foreach { st =>
       st.getPath.getName match {
         case n @ VersionedDir(_, _) if st.isDirectory && !referenced(n) &&
@@ -345,72 +339,25 @@ private[graft] object Compaction {
         case _ => ()
       }
     }
-    // a legacy dir is unreachable only once at least two pointers are in
-    // grace and EVERY kept pointer maps its name elsewhere (with one
-    // pointer, the legacy dir IS the previous snapshot and an in-flight
-    // reader may hold it)
-    if (keptMaps.size >= 2) {
-      val latest = keptMaps.last
-      latest.foreach { case (name, vdir) =>
-        if (vdir != name &&
-            keptMaps.init.forall(m => m.get(name).exists(_ != name))) {
-          val legacy = new Path(s"$root/$name")
-          if (fs.exists(legacy) && agedOut(fs, legacy, grace))
-            fs.delete(legacy, true): Unit
-        }
-      }
-    }
   }
 
   /** Delete the increment directories every in-grace snapshot prunes:
     * batch id at or below the OLDEST kept generation's watermark. Called
-    * by folds and by [[StreamingAnn]]-style reclusters after their
-    * promote; deferred deletion is what lets a reader of the previous
-    * base keep unioning the increments that base has not folded. */
+    * by folds and by rebuilds after their publish; deferred deletion is
+    * what lets a reader of the previous base keep unioning the
+    * increments that base has not folded. */
   private[graft] def gcIncrements(spark: SparkSession, root: String,
                                   baseName: String = "base"): Unit = {
     val fs = fsFor(spark, root)
     val grace = graceMs(spark)
     val incDir = new Path(s"$root/increments")
     if (!fs.exists(incDir)) return
-    val dir = new Path(s"$root/$PtrDir")
-    val ids =
-      if (fs.exists(dir)) {
-        val all = fs.listStatus(dir).map(_.getPath.getName)
-          .filter(n => n.startsWith("p") && n.drop(1).forall(_.isDigit))
-          .map(_.drop(1).toLong).sorted
-        // same kept set as gcVersions: last two plus any in-grace pointer
-        // (its snapshot still needs the increments above ITS watermark)
-        val last2 = all.takeRight(2).toSet
-        all.filter(i => last2(i) ||
-          !agedOut(fs, new Path(dir, ptrName(i)), grace))
-      } else Array.empty[Long]
-    def wmOfGen(id: Long): Long = {
-      val in = fs.open(new Path(dir, ptrName(id)))
-      val m = try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.nonEmpty).map { l =>
-          val Array(k, v) = l.split("\t", 2); k -> v
-        }.toMap
-      finally in.close()
-      m.get(baseName)
-        .map(d => readWm(fs, new Path(s"$root/$d")))
-        .getOrElse(legacyWm)
-    }
-    def legacyWm: Long = {
-      val legacy = new Path(s"$root/$baseName")
-      if (fs.exists(legacy)) readWm(fs, legacy) else -1L
-    }
-    val horizon: Long =
-      if (ids.isEmpty) legacyWm // unversioned root: legacy base (if any)
-                                // is the only snapshot anyone can hold
-      else {
-        val gens = ids.map(wmOfGen).min
-        // with fewer than two generations the legacy layout (if any) is
-        // still in grace
-        val legacy = new Path(s"$root/$baseName")
-        if (ids.length < 2 && fs.exists(legacy)) math.min(legacyWm, gens)
-        else gens
-      }
+    val kept = keptPointers(fs, root, grace)
+    // no committed generation yet: nothing is folded
+    val horizon = if (kept.isEmpty) -1L else kept.map { id =>
+      readPointer(fs, root, id).get(baseName)
+        .map(d => readWm(fs, new Path(s"$root/$d"))).getOrElse(-1L)
+    }.min
     incrementIds(spark, root).filter(_ <= horizon).foreach { b =>
       val p = new Path(s"$root/increments/batch=$b")
       if (agedOut(fs, p, grace)) fs.delete(p, true): Unit
@@ -452,10 +399,9 @@ private[graft] object Compaction {
     try out.write(wm.toString.getBytes("UTF-8")) finally out.close()
   }
 
-  /** Stamp a freshly-written uncommitted sibling (e.g. a recluster's
-    * `base_new`) with the watermark it subsumes, BEFORE it is promoted —
-    * the stamp travels with the directory through the promote,
-    * atomically. */
+  /** Stamp a freshly-written, not yet committed generation (inside a
+    * [[publish]] body) with the watermark it subsumes — the stamp goes
+    * live with the directory, atomically. */
   private[graft] def stampWatermark(spark: SparkSession, dir: String,
                                     wm: Long): Unit =
     writeWm(fsFor(spark, dir), new Path(dir), wm)
@@ -485,41 +431,38 @@ private[graft] object Compaction {
 
   // ─────────────────────────────── maintenance ops ──
 
-  /** Checked rename: Hadoop's rename reports failure as a boolean (dest
-    * exists, source missing, FS error) — fail fast instead. */
-  private def mv(fs: FileSystem, src: Path, dst: Path): Unit = {
-    require(!fs.exists(dst), s"maintenance swap: $dst already exists")
-    require(fs.rename(src, dst), s"maintenance swap: rename $src -> $dst failed")
-  }
-
-  /** Converge debris of the PRE-versioning rename-swap fold (`base_old` /
-    * `base_compact`) left by an upgrade mid-crash; versioned folds never
-    * create these states. Crash matrix: `base_old` with `base` present →
-    * the new base was live, drop the old copy; `base_old` alone → it IS
-    * the only copy, restore it; any `base_compact` → an unpromoted
-    * write-aside, discard (its increments are intact and refold). */
-  private[graft] def recover(spark: SparkSession, root: String,
-                             baseName: String = "base"): Unit = {
-    val fs = fsFor(spark, root)
-    val base = new Path(s"$root/$baseName")
-    val old = new Path(s"$root/${baseName}_old")
-    val compact = new Path(s"$root/${baseName}_compact")
-    if (fs.exists(old)) {
-      if (fs.exists(base)) {
-        fs.delete(old, true)
-      } else {
-        require(fs.rename(old, base),
-          s"compaction recover: rename $old -> $base failed")
-      }
+  /** Make a new generation of `names` live under `root` — the one way any
+    * maintained directory is written, seed builds and rebuilds alike.
+    * Reserves the next generation id `K`, hands `write` the map
+    * name → `<root>/<name>_v<K>` to fill (an uncommitted crash leftover at
+    * those paths is cleared first), then commits ONE pointer file naming
+    * them all and runs GC. A crash before the commit leaves `_v<K>`
+    * directories no pointer references — never read, reaped by a later
+    * GC, overwritten by the next writer; after it the whole set is live
+    * at once (fresh centroids never route over stale posting lists).
+    * Callers whose new base subsumes increments stamp its watermark
+    * inside `write` ([[stampWatermark]]) and run [[gcIncrements]] after.
+    * Holds the root's write lease. */
+  private[graft] def publish[T](spark: SparkSession, root: String,
+                                names: Seq[String])
+                               (write: Map[String, String] => T): T =
+    withWriteLease(spark, root) {
+      require(names.nonEmpty, "publish needs at least one directory name")
+      val fs = fsFor(spark, root)
+      val gen = nextGenId(fs, root)
+      val dirs = names.map(n => n -> s"${n}_v$gen").toMap
+      dirs.values.foreach(d => fs.delete(new Path(s"$root/$d"), true))
+      val out = write(dirs.map { case (n, d) => n -> s"$root/$d" })
+      commitPointer(spark, root, dirs, gen)
+      gcVersions(spark, root)
+      out
     }
-    if (fs.exists(compact)) fs.delete(compact, true): Unit
-  }
 
   /** Fold the current increments of the artifact rooted at `root` into a
     * NEW base generation. `fold(basePath, incrementPaths)` builds the
     * merged frame (basePath is None when no base exists yet);
     * `write(df, outPath)` materializes it with the family's layout.
-    * The new generation commits via the pointer; the previous generation
+    * The new generation commits via [[publish]]; the previous generation
     * and the increments it still needs survive one grace round for
     * in-flight readers. Returns the number of increment directories
     * folded (0 = nothing to do — GC may still have reaped out-of-grace
@@ -529,35 +472,22 @@ private[graft] object Compaction {
                     (fold: (Option[String], Seq[String]) => DataFrame)
                     (write: (DataFrame, String) => Unit): Int =
     withWriteLease(spark, root) {
-      val fs = fsFor(spark, root)
-      // converge any pre-versioning debris before trusting the layout
-      recoverPromote(spark, root)
-      recover(spark, root, baseName)
       val v = view(spark, root)
-      val basePath = v.dir(baseName)
       val wm = v.watermark(baseName)
       val fresh = incrementIds(spark, root).filter(_ > wm)
       if (fresh.isEmpty) {
         gcVersions(spark, root)
         gcIncrements(spark, root, baseName)
-        0
       } else graft.ops.Jobs.labeled(spark, s"fold $root/$baseName") {
         // the shared FileStatusCache may hold listings from earlier reads
         // of these paths (a restated increment rewrites its part files
         // under the same directory) — refresh before folding
         spark.catalog.refreshByPath(root)
-        val gen = nextGenId(fs, root)
-        val outDir = s"$root/${baseName}_v$gen"
-        fs.delete(new Path(outDir), true) // uncommitted leftover of a crash
-        write(fold(basePath, fresh.map(b => s"$root/increments/batch=$b")),
-          outDir)
-        writeWm(fs, new Path(outDir), math.max(wm, fresh.max))
-        commitPointer(spark, root, Map(baseName -> s"${baseName}_v$gen"), gen)
-        gcVersions(spark, root)
-        gcIncrements(spark, root, baseName)
-        spark.catalog.refreshByPath(root)
-        fresh.size
+        rewrite(spark, root, baseName, math.max(wm, fresh.max))(write(
+          fold(v.dir(baseName), fresh.map(b => s"$root/increments/batch=$b")),
+          _))
       }
+      fresh.size
     }
 
   /** Rewrite the live base generation WITHOUT folding increments — the
@@ -571,107 +501,25 @@ private[graft] object Compaction {
                                 (transform: DataFrame => DataFrame)
                                 (write: (DataFrame, String) => Unit): Unit =
     withWriteLease(spark, root) {
-      val fs = fsFor(spark, root)
-      recoverPromote(spark, root)
-      recover(spark, root, baseName)
       val v = view(spark, root)
       v.dir(baseName).foreach { basePath => graft.ops.Jobs.labeled(spark,
           s"vacuum $root/$baseName") {
-        val wm = v.watermark(baseName)
         spark.catalog.refreshByPath(root)
-        val gen = nextGenId(fs, root)
-        val outDir = s"$root/${baseName}_v$gen"
-        fs.delete(new Path(outDir), true)
-        write(transform(spark.read.parquet(basePath)), outDir)
-        writeWm(fs, new Path(outDir), wm)
-        commitPointer(spark, root, Map(baseName -> s"${baseName}_v$gen"), gen)
-        gcVersions(spark, root)
-        gcIncrements(spark, root, baseName)
-        spark.catalog.refreshByPath(root)
+        rewrite(spark, root, baseName, v.watermark(baseName))(
+          write(transform(spark.read.parquet(basePath)), _))
       } }
     }
 
-  /** Atomically publish `$root/<name>_new` as the live generation of
-    * every name, in ONE pointer commit — the recluster/retrain flip where
-    * several directories must move together (fresh centroids routing over
-    * old posting lists silently degrades every search). The `_new`
-    * payload dirs are renamed to their `_v<K>` generation names (invisible
-    * to readers — nothing references them yet), then the pointer commit
-    * makes the whole set live at once. A crash before the commit leaves
-    * uncommitted garbage for GC; after it, the new set is fully live.
-    * The previous generation survives one grace round. Callers relying on
-    * increments being subsumed stamp the new base's watermark BEFORE
-    * calling ([[stampWatermark]]) and run [[gcIncrements]] after. */
-  private[graft] def promote(spark: SparkSession, root: String,
-                             names: Seq[String]): Unit =
-    withWriteLease(spark, root) { promoteHeld(spark, root, names) }
-
-  /** [[promote]]'s body for a caller ALREADY holding this root's write
-    * lease (nested acquisition on one root fails fast by design —
-    * [[graft.sim.GraphAnnIndex.rebuildIndex]] flips the edges root while
-    * serializing the whole rebuild on that same root's lease). */
-  private[graft] def promoteHeld(spark: SparkSession, root: String,
-                                 names: Seq[String]): Unit = {
-      require(names.nonEmpty, "promote needs at least one directory name")
-      val fs = fsFor(spark, root)
-      // converge any PRE-VERSIONING interrupted promote, but keep the _new
-      // dirs — they are this call's freshly-written payload
-      recoverPromote(spark, root, dropUncommittedNew = false)
-      names.foreach { n =>
-        require(fs.exists(new Path(s"$root/${n}_new")),
-          s"promote: $root/${n}_new is missing")
-      }
-      val gen = nextGenId(fs, root)
-      names.foreach { n =>
-        val dst = new Path(s"$root/${n}_v$gen")
-        fs.delete(dst, true) // uncommitted leftover of a crash
-        mv(fs, new Path(s"$root/${n}_new"), dst)
-      }
-      commitPointer(spark, root,
-        names.map(n => n -> s"${n}_v$gen").toMap, gen)
-      gcVersions(spark, root)
-  }
-
-  /** Converge an interrupted PRE-VERSIONING [[promote]] (the
-    * `_promote_pending` marker protocol): marker present → roll FORWARD
-    * (finish each name's swap, delete `_old` dirs and the marker); marker
-    * absent → roll BACK (leftover `_new` dirs from a pre-commit crash are
-    * discarded unless `dropUncommittedNew` is false — [[promote]] passes
-    * false because the `_new` dirs are its own payload). `_old` dirs with
-    * no marker are NEVER touched here: `<base>_old` may belong to an
-    * interrupted legacy fold swap, whose [[recover]] is the one that
-    * knows whether it is the only live copy. */
-  private[graft] def recoverPromote(spark: SparkSession, root: String,
-                                    dropUncommittedNew: Boolean = true): Unit = {
-    val fs = fsFor(spark, root)
-    val marker = new Path(s"$root/_promote_pending")
-    if (fs.exists(marker)) {
-      val in = fs.open(marker)
-      val names = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().filter(_.nonEmpty).toList finally in.close()
-      names.foreach { n =>
-        val live = new Path(s"$root/$n")
-        val nw = new Path(s"$root/${n}_new")
-        val old = new Path(s"$root/${n}_old")
-        if (fs.exists(nw)) {
-          // this name's swap did not finish — complete it
-          if (fs.exists(live)) {
-            require(!fs.exists(old), s"recoverPromote: both $live and $old " +
-              s"exist with ${nw} pending — layout needs manual inspection")
-            mv(fs, live, old)
-          }
-          mv(fs, nw, live)
-        }
-        // swap done (or just completed): the old copy is garbage
-        fs.delete(old, true)
-      }
-      fs.delete(marker, false)
-    } else if (dropUncommittedNew) {
-      // pre-commit crash: _new dirs are unpromoted garbage, discard
-      val st = if (fs.exists(new Path(root))) fs.listStatus(new Path(root))
-               else Array.empty[org.apache.hadoop.fs.FileStatus]
-      st.filter(s => s.isDirectory && s.getPath.getName.endsWith("_new"))
-        .foreach(s => fs.delete(s.getPath, true))
+  /** Publish `write`'s output as the next `baseName` generation stamped
+    * with watermark `wm`, then reap the increments no in-grace snapshot
+    * needs. */
+  private def rewrite(spark: SparkSession, root: String, baseName: String,
+                      wm: Long)(write: String => Unit): Unit = {
+    publish(spark, root, Seq(baseName)) { out =>
+      write(out(baseName))
+      stampWatermark(spark, out(baseName), wm)
     }
+    gcIncrements(spark, root, baseName)
+    spark.catalog.refreshByPath(root)
   }
 }

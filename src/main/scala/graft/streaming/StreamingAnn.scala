@@ -30,10 +30,13 @@ object StreamingAnn {
   def writeBaseIndex(corpus: DataFrame, id: String, emb: String,
                      cell: String, indexPath: String): Unit = {
     val cents = Similarity.ivfCentroids(corpus, cell, emb)
-    cents.write.mode("overwrite").parquet(s"$indexPath/centroids")
-    Similarity.ivfAssign(corpus, id, emb, cents)
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$indexPath/base")
+    Compaction.publish(corpus.sparkSession, indexPath,
+        Seq("centroids", "base")) { out =>
+      cents.write.mode("overwrite").parquet(out("centroids"))
+      Similarity.ivfAssign(corpus, id, emb, cents)
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(out("base"))
+    }
   }
 
   /** foreachBatch sink: assign each micro-batch to the stored centroids
@@ -48,8 +51,7 @@ object StreamingAnn {
         if (!Compaction.isFolded(batch.sparkSession, indexPath, batchId) &&
             !batch.isEmpty) {
           val cents = batch.sparkSession.read.parquet(
-            Compaction.resolve(batch.sparkSession, indexPath, "centroids")
-              .getOrElse(s"$indexPath/centroids"))
+            Compaction.view(batch.sparkSession, indexPath).path("centroids"))
           Similarity.ivfAssign(batch, id, emb, cents)
             .write.mode("overwrite").partitionBy("cell")
             .parquet(s"$indexPath/increments/batch=$batchId")
@@ -133,7 +135,7 @@ object StreamingAnn {
     val v = Compaction.view(spark, indexPath)
     Similarity.annIvfStored(
       Tombstones.applyTo(rawPostings(v), indexPath, "vec_id"),
-      spark.read.parquet(v.dirOrLegacy("centroids")), queries, id, emb, k,
+      spark.read.parquet(v.path("centroids")), queries, id, emb, k,
       nProbe)
   }
 
@@ -152,7 +154,7 @@ object StreamingAnn {
     val v = Compaction.view(spark, indexPath)
     Similarity.annIvfStored(
       Tombstones.applyTo(rawPostings(v), indexPath, "vec_id").filter(pred),
-      spark.read.parquet(v.dirOrLegacy("centroids")), queries, id, emb, k,
+      spark.read.parquet(v.path("centroids")), queries, id, emb, k,
       nProbe)
   }
 
@@ -176,28 +178,27 @@ object StreamingAnn {
     * increments RESTART (they encoded assignments under the old quantizer;
     * the rebuild subsumes them). Centroids and base must flip TOGETHER —
     * fresh centroids routing over old posting lists silently degrades
-    * every search — so the swap is [[Compaction.promote]]'s single
-    * pointer commit: both `_new` payloads are published as one new
-    * generation, readers holding the previous generation keep a complete
+    * every search — so both are one [[Compaction.publish]]: a single
+    * pointer commit makes the pair live, readers holding the previous
+    * generation keep a complete
     * view through the grace period, and the subsumed increments are GC'd
     * only once no in-grace snapshot can need them (the folded watermark
     * stamped into the new base is the prune signal either way). Run
     * between streams. */
   def reclusterIndex(spark: SparkSession, indexPath: String): Unit = {
-    Compaction.recoverPromote(spark, indexPath)
-    Compaction.recover(spark, indexPath)
     spark.catalog.refreshByPath(indexPath)
     val prevWm = Compaction.foldedWatermark(spark, indexPath)
     val subsumedWm = (prevWm +: Compaction.incrementIds(spark, indexPath)).max
     val members = readPostings(spark, indexPath)
-    Similarity.ivfCentroids(members, "cell", "v")
-      .write.mode("overwrite").parquet(s"$indexPath/centroids_new")
-    Similarity.ivfAssign(members.select("vec_id", "v"), "vec_id", "v",
-        spark.read.parquet(s"$indexPath/centroids_new"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$indexPath/base_new")
-    Compaction.stampWatermark(spark, s"$indexPath/base_new", subsumedWm)
-    Compaction.promote(spark, indexPath, Seq("centroids", "base"))
+    Compaction.publish(spark, indexPath, Seq("centroids", "base")) { out =>
+      Similarity.ivfCentroids(members, "cell", "v")
+        .write.mode("overwrite").parquet(out("centroids"))
+      Similarity.ivfAssign(members.select("vec_id", "v"), "vec_id", "v",
+          spark.read.parquet(out("centroids")))
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(out("base"))
+      Compaction.stampWatermark(spark, out("base"), subsumedWm)
+    }
     Compaction.gcIncrements(spark, indexPath)
     spark.catalog.refreshByPath(indexPath)
   }
@@ -210,7 +211,7 @@ object StreamingAnn {
     val v = Compaction.view(spark, indexPath)
     Similarity.ivfCellDrift(
       Tombstones.applyTo(rawPostings(v), indexPath, "vec_id"),
-      spark.read.parquet(v.dirOrLegacy("centroids")))
+      spark.read.parquet(v.path("centroids")))
   }
 
   /** The closed drift loop: read the [[cellDrift]] report; when any cell
@@ -246,10 +247,10 @@ object StreamingAnn {
         .reduce(_.unionByName(_)), indexPath, "vec_id")
     } (writeCells)
     // pure deletion campaign: nothing folded, but the base still holds
-    // tombstoned rows physically — vacuum it through the same swap
-    if (folded == 0 && Tombstones.needsVacuum(
-        spark.read.parquet(Compaction.resolve(spark, indexPath, "base")
-          .getOrElse(s"$indexPath/base")), indexPath, "vec_id"))
+    // tombstoned rows physically — vacuum it through the same publish
+    if (folded == 0 && Compaction.resolve(spark, indexPath, "base").exists(
+        b => Tombstones.needsVacuum(spark.read.parquet(b), indexPath,
+          "vec_id")))
       Compaction.rewriteBase(spark, indexPath)(df =>
         Tombstones.applyTo(df.select("vec_id", "v", "cell"), indexPath,
           "vec_id"))(writeCells)

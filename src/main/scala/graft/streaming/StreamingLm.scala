@@ -19,9 +19,9 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   * derived tables (context totals, continuation counts — which do NOT
   * add) recompute from the merged counts at vocabulary scale. State lives
   * in parquet: driver restarts are free, and index size is bigram-TYPE-
-  * sized (Heaps-law sublinear in corpus bytes). Compaction = rewrite the
-  * merged frame as a new base, same write-aside-and-swap protocol as
-  * `Dedup.compactSignatureIndex`.
+  * sized (Heaps-law sublinear in corpus bytes). Compaction = publish the
+  * merged frame as a new base generation, the [[Compaction]] protocol
+  * `Dedup.compactSignatureIndex` also rides.
   */
 object StreamingLm {
 
@@ -47,8 +47,10 @@ object StreamingLm {
     * increments simply ARE the model). */
   def writeBaseCounts(corpus: DataFrame, id: String, text: String,
                       countsPath: String): Unit =
-    NgramLm.kneserNeyCounts(corpus, id, text)
-      .write.mode("overwrite").parquet(s"$countsPath/base")
+    Compaction.publish(corpus.sparkSession, countsPath, Seq("base")) { out =>
+      NgramLm.kneserNeyCounts(corpus, id, text)
+        .write.mode("overwrite").parquet(out("base"))
+    }
 
   /** The maintained index as one (v, w, cvw) frame: base (if present) +
     * every increment, merged by integer sum — exactly

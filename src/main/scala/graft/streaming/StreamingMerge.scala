@@ -30,8 +30,8 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 object StreamingMerge {
 
   /** One merge application onto the stored snapshot (shared by the batch
-    * and streaming paths). `basePath/current` must exist (via [[init]]).
-    * The swap rides [[Compaction]]'s versioned-root protocol: the merged
+    * and streaming paths). The snapshot must exist (via [[init]]).
+    * The apply rides [[Compaction]]'s versioned-root protocol: the merged
     * snapshot publishes as a new immutable generation behind an atomic
     * pointer flip, so a reader that resolved [[readSnapshot]] before the
     * apply keeps a complete view through the grace period (one further
@@ -39,24 +39,27 @@ object StreamingMerge {
   def applyBatch(spark: SparkSession, changes: DataFrame, basePath: String,
                  key: String, versionCol: String, opCol: String): Unit = {
     val base = readSnapshot(spark, basePath)
-    Merge.upsert(base, changes, key, versionCol, opCol)
-      .write.mode("overwrite").parquet(s"$basePath/current_new")
-    Compaction.promote(spark, basePath, Seq("current"))
+    publish(spark, basePath,
+      Merge.upsert(base, changes, key, versionCol, opCol))
   }
 
-  /** Seed the snapshot directory from an initial base table. */
+  /** Seed the snapshot from an initial base table — generation 1. */
   def init(base: DataFrame, basePath: String): Unit =
-    base.write.mode("overwrite").parquet(s"$basePath/current")
+    publish(base.sparkSession, basePath, base)
+
+  private def publish(spark: SparkSession, basePath: String,
+                      snapshot: DataFrame): Unit =
+    Compaction.publish(spark, basePath, Seq("current")) { out =>
+      snapshot.write.mode("overwrite").parquet(out("current"))
+    }
 
   /** The live snapshot — resolve the pointer once per query
-    * ([[Compaction.view]]; legacy pre-versioning layouts fall back to the
-    * literal `current` directory). */
+    * ([[Compaction.view]]). */
   def readSnapshot(spark: SparkSession, basePath: String): DataFrame =
-    spark.read.parquet(Compaction.resolve(spark, basePath, "current")
-      .getOrElse(s"$basePath/current"))
+    spark.read.parquet(Compaction.view(spark, basePath).path("current"))
 
   /** foreachBatch sink applying each micro-batch of changes to the
-    * snapshot at `basePath/current`. */
+    * snapshot under `basePath`. */
   def upsertSink(changes: DataFrame, basePath: String, key: String,
                  versionCol: String, opCol: String,
                  checkpoint: String): DataStreamWriter[Row] =

@@ -48,8 +48,10 @@ object StreamingSketch {
     * the first increments simply ARE the sketch). */
   def writeBaseSketch(df: DataFrame, key: String, sketchPath: String,
                       depth: Int = 4, width: Int = 256): Unit =
-    Stats.countMinSketch(df, key, depth, width)
-      .write.mode("overwrite").parquet(s"$sketchPath/base")
+    Compaction.publish(df.sparkSession, sketchPath, Seq("base")) { out =>
+      Stats.countMinSketch(df, key, depth, width)
+        .write.mode("overwrite").parquet(out("base"))
+    }
 
   /** The maintained sketch as one (j, bucket, c) frame: base (if present)
     * plus every increment, merged by counter sum. Query it with
@@ -104,8 +106,10 @@ object StreamingSketch {
   /** Optional base DDSketch from a batch corpus. */
   def writeBaseDdSketch(df: DataFrame, value: String, keys: Seq[String],
                         sketchPath: String, alphaPm: Int = 10): Unit =
-    Stats.ddSketchBuckets(df, value, keys, alphaPm)
-      .write.mode("overwrite").parquet(s"$sketchPath/base")
+    Compaction.publish(df.sparkSession, sketchPath, Seq("base")) { out =>
+      Stats.ddSketchBuckets(df, value, keys, alphaPm)
+        .write.mode("overwrite").parquet(out("base"))
+    }
 
   /** The maintained DDSketch as one (keys, _b, _c) bucket frame: base
     * (if present) plus every increment, merged by counter sum. Read

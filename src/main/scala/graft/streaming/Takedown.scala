@@ -159,10 +159,7 @@ object Takedown {
         graft.sim.PqIndex.compactIndex(spark, d): Unit
         // the IVF-PQ posting lists (when deployed under the same root)
         // are erased by their own vacuum rewrite
-        val fs = new org.apache.hadoop.fs.Path(d)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val postings = Compaction.view(spark, d).dirOrLegacy("postings")
-        if (fs.exists(new org.apache.hadoop.fs.Path(postings)))
+        if (Compaction.resolve(spark, d, "postings").isDefined)
           graft.sim.PqIndex.vacuumIvfPq(spark, d)
       }) ++
       t.dedup.map(d =>

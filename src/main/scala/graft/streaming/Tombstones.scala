@@ -12,11 +12,12 @@ import org.apache.spark.sql.functions._
   * Design: deletes are data, not mutations. A delete lands as a TOMBSTONE
   * increment (one row per deleted id) under the artifact it applies to:
   * {{{
-  *   <root>/tombstones/base/              (tid) — folded tombstone set
+  *   <root>/tombstones/base_v<K>/         (tid) — folded tombstone set
   *   <root>/tombstones/increments/batch=N (tid) — one dir per delete batch
   * }}}
   * exactly the [[Compaction]] protocol the data increments already ride
-  * (restatement-safe landings, folded-batch watermark, crash-safe swap),
+  * (restatement-safe landings, folded-batch watermark, pointer-committed
+  * generations),
   * with set-union as the merge — tombstones are trivially
   * union-distributive, so fold ≡ read-merge is an identity.
   *

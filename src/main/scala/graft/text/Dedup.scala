@@ -217,26 +217,43 @@ object Dedup {
     * (see `incrementalCandidatesIndexed`) instead of re-hashing the corpus. */
   def writeSignatureIndex(sig: DataFrame, id: String, path: String,
                           nBuckets: Int = DefaultIndexBuckets): Unit = {
-    val spark = sig.sparkSession
     // null band keys (docs too short to produce a single shingle) can never
-    // satisfy the band equi-join, so they'd be dead weight in the index.
-    // repartition on bucket so each writer task owns whole buckets — one
-    // file per bucket directory instead of (tasks × buckets) small files
+    // satisfy the band equi-join, so they'd be dead weight in the index
     val bands = bandRows(sig, id).filter(col("band_key").isNotNull)
-      .withColumn("bucket", pmod(col("band_key"), lit(nBuckets.toLong)).cast("int"))
-    // A dynamic-partitioned write of an EMPTY frame emits zero data files,
-    // leaving an index that fails schema inference on read — a cold-start
-    // stream seeds its index over an empty corpus, so that case writes one
-    // plain empty parquet file (schema preserved; `bucket` rides as a data
-    // column, which every reader filter also accepts).
-    if (bands.isEmpty)
-      bands.coalesce(1).write.mode("overwrite").parquet(s"$path/bands")
-    else
-      bands.repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/bands")
+    publishBands(bands, bands.isEmpty, nBuckets, path, -1L)
+  }
+
+  /** Publish `bands` bucketed at width `nBuckets` with the meta row
+    * pinning that width, as ONE generation (a new modulus routing over
+    * old bucket directories would probe garbage); `wm` is the folded
+    * watermark the new base subsumes (-1 for a seed). */
+  private def publishBands(bands: DataFrame, isEmpty: Boolean,
+                           nBuckets: Int, path: String, wm: Long): Unit = {
+    val spark = bands.sparkSession
     import spark.implicits._
-    Seq((nBuckets, NumHashes, NumBands)).toDF("n_buckets", "num_hashes", "num_bands")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    val bucketed = bands.withColumn("bucket",
+      pmod(col("band_key"), lit(nBuckets.toLong)).cast("int"))
+    graft.streaming.Compaction.publish(spark, path, Seq("bands", "meta")) {
+      out =>
+        // A dynamic-partitioned write of an EMPTY frame emits zero data
+        // files, leaving an index that fails schema inference on read — a
+        // cold-start stream seeds its index over an empty corpus, so that
+        // case writes one plain empty parquet file (schema preserved;
+        // `bucket` rides as a data column, which every reader filter also
+        // accepts). Otherwise repartition on bucket so each writer task
+        // owns whole buckets — one file per bucket directory instead of
+        // (tasks × buckets) small files.
+        if (isEmpty)
+          bucketed.coalesce(1).write.mode("overwrite").parquet(out("bands"))
+        else
+          bucketed.repartition(col("bucket"))
+            .write.mode("overwrite").partitionBy("bucket")
+            .parquet(out("bands"))
+        graft.streaming.Compaction.stampWatermark(spark, out("bands"), wm)
+        Seq((nBuckets, NumHashes, NumBands))
+          .toDF("n_buckets", "num_hashes", "num_bands")
+          .coalesce(1).write.mode("overwrite").parquet(out("meta"))
+    }
   }
 
   /** Write one batch's band rows as an index INCREMENT at
@@ -297,8 +314,8 @@ object Dedup {
   /** Fold all streaming increments into the base bands: one
     * bucket-partitioned rewrite of base ∪ increments, then the increment
     * directories are dropped — [[graft.streaming.Compaction.foldIncrements]]
-    * with `bands` as the live directory, so the swap gets the shared
-    * crash-safe protocol (checked renames, interrupted-swap recovery, the
+    * with `bands` as the live directory, so the fold gets the shared
+    * crash-safe protocol (pointer-committed generations, the
     * folded-batch watermark that makes replay-after-fold single-count).
     * Tombstones fold first and apply inside the data fold (the physical
     * erasure of deleted docs' band rows); a pure deletion campaign gets
@@ -323,9 +340,8 @@ object Dedup {
           (baseDf +: incs.map(p => spark.read.parquet(p).select(cols: _*)))
             .reduce(_.unionByName(_)), path, bandsIdCol(baseDf))
     } (writeBands)
-    if (folded == 0) {
-      val baseDf = spark.read.parquet(
-        Compaction.resolve(spark, path, "bands").getOrElse(s"$path/bands"))
+    if (folded == 0) Compaction.resolve(spark, path, "bands").foreach { b =>
+      val baseDf = spark.read.parquet(b)
       if (Tombstones.needsVacuum(baseDf, path, bandsIdCol(baseDf)))
         Compaction.rewriteBase(spark, path, "bands")(df =>
           Tombstones.applyTo(df, path, bandsIdCol(df))
@@ -463,16 +479,13 @@ object Dedup {
   }
 
   /** The index meta row (n_buckets, num_hashes, num_bands), resolved
-    * through the versioned-root pointer — a [[rebuildSignatureIndex]]
-    * flips meta WITH the bands (the bucket modulus must match the
-    * layout); plain `$path/meta` is the pre-rebuild legacy location. */
+    * through the root's pointer — meta is published WITH the bands (the
+    * bucket modulus must match the layout). */
   private def readIndexMeta(spark: org.apache.spark.sql.SparkSession,
-                            path: String): org.apache.spark.sql.Row = {
-    val p = graft.streaming.Compaction.view(spark, path).dir("meta")
-      .getOrElse(s"$path/meta")
-    spark.read.parquet(p)
+                            path: String): org.apache.spark.sql.Row =
+    spark.read.parquet(graft.streaming.Compaction.view(spark, path)
+        .path("meta"))
       .select("n_buckets", "num_hashes", "num_bands").head()
-  }
 
   /** Target band rows per bucket directory for [[deriveBuckets]]: at
     * ~40 B/row this keeps bucket directories near healthy parquet sizes
@@ -512,7 +525,7 @@ object Dedup {
     * monitor (increments empty → the gate holds until new data streams).
     *
     * Atomicity: meta and the bands base flip TOGETHER in one
-    * [[graft.streaming.Compaction.promoteHeld]] pointer commit (a new
+    * [[graft.streaming.Compaction.publish]] pointer commit (a new
     * modulus routing over old bucket directories would probe garbage),
     * with the whole rebuild serialized on this root's write lease — the
     * same lease every fold takes, so no append/fold can interleave.
@@ -526,7 +539,6 @@ object Dedup {
                               DefaultRowsPerBucket): Unit = {
     import graft.streaming.{Compaction, Tombstones}
     Compaction.withWriteLease(spark, path) {
-      Compaction.recoverPromote(spark, path)
       spark.catalog.refreshByPath(path)
       Tombstones.compact(spark, path)
       val subsumed = (Compaction.foldedWatermark(spark, path, "bands") +:
@@ -537,24 +549,8 @@ object Dedup {
       val live = graft.ops.Checkpoint.cut(
         readSignatureIndex(spark, path).bands.drop("bucket"), eager = false)
       val liveRows = live.count()
-      val width = deriveBuckets(liveRows, targetRowsPerBucket)
-      val rebanded = live.withColumn("bucket",
-        pmod(col("band_key"), lit(width.toLong)).cast("int"))
-      // the writeSignatureIndex empty-corpus guard, on the rebuild path
-      if (liveRows == 0L)
-        rebanded.coalesce(1).write.mode("overwrite")
-          .parquet(s"$path/bands_new")
-      else
-        rebanded.repartition(col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket")
-          .parquet(s"$path/bands_new")
-      Compaction.stampWatermark(spark, s"$path/bands_new", subsumed)
-      val sess = spark
-      import sess.implicits._
-      Seq((width, NumHashes, NumBands))
-        .toDF("n_buckets", "num_hashes", "num_bands")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta_new")
-      Compaction.promoteHeld(spark, path, Seq("bands", "meta"))
+      publishBands(live, liveRows == 0L,
+        deriveBuckets(liveRows, targetRowsPerBucket), path, subsumed)
       Compaction.gcIncrements(spark, path, "bands")
       spark.catalog.refreshByPath(path)
     }

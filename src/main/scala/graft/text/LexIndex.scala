@@ -8,12 +8,13 @@ import org.apache.spark.sql.functions._
   * postings live on disk, maintenance appends per-batch increments, and
   * query-time scoring reads ONLY the partitions the query's terms hash to.
   *
-  * Layout under `dir`:
+  * Layout under `dir` (two [[graft.streaming.Compaction]] roots; `_v<K>`
+  * is the generation the root's pointer names):
   * {{{
-  *   meta/                         n_buckets (the term-hash partitioner)
-  *   postings/base/bucket=B/...    (term, doc_id, tf), term-hash-partitioned
+  *   postings/meta_v<K>/           n_buckets (the term-hash partitioner)
+  *   postings/base_v<K>/bucket=B/  (term, doc_id, tf), term-hash-partitioned
   *   postings/increments/batch=N/  same schema, one dir per ingested batch
-  *   doclens/base/                 (doc_id, dl) — BM25's length normalizer
+  *   doclens/base_v<K>/            (doc_id, dl) — BM25's length normalizer
   *   doclens/increments/batch=N/
   *   tombstones/...                deleted doc_ids ([[deleteBatch]])
   * }}}
@@ -34,7 +35,7 @@ import org.apache.spark.sql.functions._
   * `isin` partition filter, so untouched term buckets never open (the
   * [[Dedup.writeSignatureIndex]] trick on the lexical axis). Doclens is
   * docs×12 B. Increment trees fold with [[compactIndex]]
-  * ([[graft.streaming.Compaction]]'s write-aside-and-swap, per root).
+  * ([[graft.streaming.Compaction.foldIncrements]], per root).
   */
 object LexIndex {
 
@@ -60,15 +61,13 @@ object LexIndex {
                        nBuckets: Int): org.apache.spark.sql.Column =
     pmod(TextOps.h64(term), lit(nBuckets.toLong)).cast("int")
 
-  /** The index's bucket width, resolved through the versioned-root
-    * pointer — a [[rebuildIndex]] flips meta WITH the postings base (the
-    * modulus must match the layout); plain `$dir/meta` is the
-    * pre-rebuild legacy location [[writeIndex]] seeds. */
-  private def nBucketsOf(spark: SparkSession, dir: String): Int = {
-    val p = graft.streaming.Compaction.view(spark, s"$dir/postings")
-      .dir("meta").getOrElse(s"$dir/meta")
-    spark.read.parquet(p).select("n_buckets").head().getInt(0)
-  }
+  /** The index's bucket width, resolved through the postings root's
+    * pointer — meta lives beside the postings base, and a [[rebuildIndex]]
+    * flips both together (the modulus must match the layout). */
+  private def nBucketsOf(spark: SparkSession, dir: String): Int =
+    spark.read.parquet(graft.streaming.Compaction
+        .view(spark, s"$dir/postings").path("meta"))
+      .select("n_buckets").head().getInt(0)
 
   /** (doc_id, _toks) — the tokenization both statistics derive from.
     * The index build consumes it twice (postings + doclens), so the
@@ -89,22 +88,43 @@ object LexIndex {
   private def docLengthsOf(toks: DataFrame): DataFrame =
     toks.select(col("doc_id"), size(col("_toks")).cast("long").as("dl"))
 
-  /** Write the base index over a corpus. */
+  /** Write the base index over a corpus: meta + postings base in one
+    * generation of the postings root, the doclens base in its own. */
   def writeIndex(docs: DataFrame, id: String, text: String, dir: String,
                  nBuckets: Int = 64): Unit = {
     val spark = docs.sparkSession
-    import spark.implicits._
-    Seq(nBuckets).toDF("n_buckets")
-      .write.mode("overwrite").parquet(s"$dir/meta")
     val toks = tokenized(docs, id, text)
-    postingsOf(toks)
-      .withColumn("bucket", bucketOf(col("term"), nBuckets))
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$dir/postings/base")
-    docLengthsOf(toks)
-      .write.mode("overwrite").parquet(s"$dir/doclens/base")
+    publishPostings(postingsOf(toks), nBuckets, dir, -1L)
+    publishDocLens(docLengthsOf(toks), dir, -1L)
   }
+
+  /** Publish `postings` bucketed at width `nBuckets` together with the
+    * meta naming that width (one pointer commit: a modulus routing over
+    * another layout would prune to garbage); `wm` is the folded
+    * watermark the new base subsumes (-1 for a seed). */
+  private def publishPostings(postings: DataFrame, nBuckets: Int,
+                              dir: String, wm: Long): Unit = {
+    val spark = postings.sparkSession
+    import spark.implicits._
+    graft.streaming.Compaction.publish(spark, s"$dir/postings",
+        Seq("base", "meta")) { out =>
+      Seq(nBuckets).toDF("n_buckets")
+        .coalesce(1).write.mode("overwrite").parquet(out("meta"))
+      postings.withColumn("bucket", bucketOf(col("term"), nBuckets))
+        .repartition(col("bucket"))
+        .write.mode("overwrite").partitionBy("bucket").parquet(out("base"))
+      graft.streaming.Compaction.stampWatermark(spark, out("base"), wm)
+    }
+  }
+
+  private def publishDocLens(docLens: DataFrame, dir: String,
+                             wm: Long): Unit =
+    graft.streaming.Compaction.publish(docLens.sparkSession,
+        s"$dir/doclens", Seq("base")) { out =>
+      docLens.write.mode("overwrite").parquet(out("base"))
+      graft.streaming.Compaction.stampWatermark(docLens.sparkSession,
+        out("base"), wm)
+    }
 
   /** Append one batch as its own increment directories — idempotent:
     * a retried batch OVERWRITES exactly its own `batch=<id>` dirs
@@ -431,20 +451,18 @@ object LexIndex {
         .reduce(_.unionByName(_)), dir, "doc_id")
     } { (df, out) => df.write.mode("overwrite").parquet(out) }
     // pure deletion campaign: nothing folded but tombstoned rows remain
-    // physically in a base — vacuum each root through the same swap
-    import graft.streaming.Compaction.resolve
-    if (p == 0 && Tombstones.needsVacuum(
-        spark.read.parquet(resolve(spark, s"$dir/postings", "base")
-          .getOrElse(s"$dir/postings/base")), dir, "doc_id"))
+    // physically in a base — vacuum each root through the same publish
+    def needsVacuum(root: String): Boolean =
+      graft.streaming.Compaction.resolve(spark, root, "base").exists(b =>
+        Tombstones.needsVacuum(spark.read.parquet(b), dir, "doc_id"))
+    if (p == 0 && needsVacuum(s"$dir/postings"))
       graft.streaming.Compaction.rewriteBase(spark, s"$dir/postings")(df =>
         Tombstones.applyTo(df.select("term", "doc_id", "tf", "bucket"),
           dir, "doc_id")) { (df, out) =>
         df.repartition(col("bucket"))
           .write.mode("overwrite").partitionBy("bucket").parquet(out)
       }
-    if (d == 0 && Tombstones.needsVacuum(
-        spark.read.parquet(resolve(spark, s"$dir/doclens", "base")
-          .getOrElse(s"$dir/doclens/base")), dir, "doc_id"))
+    if (d == 0 && needsVacuum(s"$dir/doclens"))
       graft.streaming.Compaction.rewriteBase(spark, s"$dir/doclens")(df =>
         Tombstones.applyTo(df.select("doc_id", "dl"), dir, "doc_id")) {
         (df, out) => df.write.mode("overwrite").parquet(out)
@@ -505,7 +523,7 @@ object LexIndex {
     * (increments empty → nothing to compare until new data streams).
     *
     * Atomicity: meta and the postings base flip TOGETHER in one
-    * [[graft.streaming.Compaction.promoteHeld]] pointer commit (a new
+    * [[graft.streaming.Compaction.publish]] pointer commit (a new
     * modulus routing over old bucket directories would prune to garbage),
     * with the whole rebuild serialized on the POSTINGS write lease — the
     * same lease every postings fold takes. The doclens base flips in its
@@ -520,8 +538,6 @@ object LexIndex {
                      DefaultPostingsPerBucket): Unit = {
     import graft.streaming.{Compaction, Tombstones}
     Compaction.withWriteLease(spark, s"$dir/postings") {
-      Compaction.recoverPromote(spark, s"$dir/postings")
-      Compaction.recoverPromote(spark, s"$dir/doclens")
       spark.catalog.refreshByPath(dir)
       Tombstones.compact(spark, dir)
       // the append-only-per-LIVE-doc contract check, BEFORE any root
@@ -542,22 +558,10 @@ object LexIndex {
       // count and the rewrite
       val live = graft.ops.Checkpoint.cut(
         readPostings(spark, dir).drop("bucket"), eager = false)
-      val width = deriveBuckets(live.count(), targetPostingsPerBucket)
-      live.withColumn("bucket", bucketOf(col("term"), width))
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$dir/postings/base_new")
-      Compaction.stampWatermark(spark, s"$dir/postings/base_new", subP)
-      import spark.implicits._
-      Seq(width).toDF("n_buckets")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$dir/postings/meta_new")
-      Compaction.promoteHeld(spark, s"$dir/postings", Seq("base", "meta"))
+      publishPostings(live,
+        deriveBuckets(live.count(), targetPostingsPerBucket), dir, subP)
       Compaction.gcIncrements(spark, s"$dir/postings")
-      readDocLens(spark, dir)
-        .write.mode("overwrite").parquet(s"$dir/doclens/base_new")
-      Compaction.stampWatermark(spark, s"$dir/doclens/base_new", subD)
-      Compaction.promote(spark, s"$dir/doclens", Seq("base"))
+      publishDocLens(readDocLens(spark, dir), dir, subD)
       Compaction.gcIncrements(spark, s"$dir/doclens")
       spark.catalog.refreshByPath(dir)
     }

@@ -77,6 +77,20 @@ class AnalysisSpec extends SparkSpec {
     assert(report.forecasts.count() == 0)
   }
 
+  test("run keeps a panel the caller cached, and releases one it cached " +
+       "itself") {
+    import org.apache.spark.storage.StorageLevel
+    val mine = integrated.filter(col("symbol") === "NOPE").cache()
+    Analysis.run(mine, maxLag = 2, nLags = 4, horizon = 2, maxIter = 2)
+    assert(mine.storageLevel != StorageLevel.NONE,
+      "the caller's cache must outlive run")
+    mine.unpersist(blocking = true)
+    val plain = integrated.filter(col("symbol") === "NONE")
+    Analysis.run(plain, maxLag = 2, nLags = 4, horizon = 2, maxIter = 2)
+    assert(plain.storageLevel == StorageLevel.NONE,
+      "run releases what it persisted")
+  }
+
   test("serve: previous-day macro lookup returns one row with a value") {
     val pm = graft.pipeline.Serve.prevDayMacro(integrated, "UNRATE").collect()
     assert(pm.length == 1 && !pm(0).isNullAt(pm(0).fieldIndex("prev_UNRATE")))

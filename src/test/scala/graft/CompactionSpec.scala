@@ -4,12 +4,12 @@ import graft.streaming.{Compaction, StreamingSketch}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
-/** The maintained-artifact fold/swap protocol under crashes and replays:
-  * every interrupted-swap state must converge to a readable artifact with
-  * the ORIGINAL or the NEW content (never neither, never a mix), a batch
-  * replayed after its increment was folded must not double-count (sink
-  * guard + read-time watermark prune + fold-time stale drop), and the
-  * compaction triggers must be no-ops below threshold. */
+/** The maintained-artifact protocol under crashes and replays: every
+  * write publishes a pointer-committed generation, so a crash at any
+  * point leaves the ORIGINAL or the NEW content readable (never neither,
+  * never a mix), a batch replayed after its increment was folded must not
+  * double-count (sink guard + read-time watermark prune + fold-time stale
+  * drop), and the compaction triggers must be no-ops below threshold. */
 class CompactionSpec extends SparkSpec {
   import spark.implicits._
 
@@ -19,21 +19,35 @@ class CompactionSpec extends SparkSpec {
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  /** Hand-built count-min-shaped artifact: one (j, bucket, c) counter. */
-  private def writeCounter(path: String, c: Long): Unit =
-    Seq((0, 0, c)).toDF("j", "bucket", "c")
-      .coalesce(1).write.mode("overwrite").parquet(path)
+  /** One count-min counter (j = 0, bucket = 0) holding `c` — a depth-1,
+    * width-1 sketch of `c` keys, so totals read back exactly. */
+  private def counter(c: Long) = spark.range(c).toDF("k")
+
+  /** Seed a sketch root through the family's own builder. */
+  private def seedSketch(root: String, c: Long): Unit =
+    StreamingSketch.writeBaseSketch(counter(c), "k", root, depth = 1,
+      width = 1)
+
+  /** Land one increment exactly as the sketch sink does. */
+  private def landCounter(root: String, batch: Long, c: Long): Unit =
+    graft.ops.Stats.countMinSketch(counter(c), "k", depth = 1, width = 1)
+      .coalesce(1).write.mode("overwrite")
+      .parquet(s"$root/increments/batch=$batch")
 
   private def readTotal(root: String): Long =
     StreamingSketch.readMergedSketch(spark, root)
       .agg(sum("c")).head().getLong(0)
 
+  private def listing(d: String): Set[String] =
+    if (!fs.exists(new Path(d))) Set.empty
+    else fs.listStatus(new Path(d)).map(_.getPath.getName).toSet
+
   test("foldIncrements: watermark makes replay-after-fold single-count " +
        "(reader prunes, next fold drops), and the trigger gates on count") {
     val sk = tmp("graft_cmp_wm")
-    writeCounter(s"$sk/base", 10)
-    writeCounter(s"$sk/increments/batch=0", 1)
-    writeCounter(s"$sk/increments/batch=1", 2)
+    seedSketch(sk, 10)
+    landCounter(sk, 0, 1)
+    landCounter(sk, 1, 2)
     assert(readTotal(sk) == 13)
 
     // trigger below threshold: untouched
@@ -42,7 +56,7 @@ class CompactionSpec extends SparkSpec {
     assert(readTotal(sk) == 13)
 
     // trigger above threshold: folds, stamps the watermark. The folded
-    // increments are RETAINED (grace): the legacy base is still an
+    // increments are RETAINED (grace): the seed generation is still an
     // in-grace snapshot with watermark -1, and a reader holding it needs
     // them — readers of the new generation prune them by partition column
     assert(StreamingSketch.compactSketchIfNeeded(spark, sk, 1) == 2)
@@ -57,7 +71,7 @@ class CompactionSpec extends SparkSpec {
 
     // a replayed batch re-lands its folded increment: the reader must
     // prune it (no double count) and the next fold must not refold it
-    writeCounter(s"$sk/increments/batch=1", 2)
+    landCounter(sk, 1, 2)
     assert(readTotal(sk) == 13,
       "read-time watermark prune must ignore a replayed folded increment")
     assert(StreamingSketch.compactSketch(spark, sk) == 0,
@@ -65,10 +79,10 @@ class CompactionSpec extends SparkSpec {
     assert(readTotal(sk) == 13)
 
     // later batches keep flowing: ids above the watermark fold normally;
-    // committing the SECOND versioned generation pushes the legacy layout
-    // out of grace, so the first fold's increments (batch ids <= the
-    // oldest surviving generation's watermark) are reaped now
-    writeCounter(s"$sk/increments/batch=2", 5)
+    // committing the third generation pushes the seed out of grace, so
+    // the first fold's increments (batch ids <= the oldest surviving
+    // generation's watermark) are reaped now
+    landCounter(sk, 2, 5)
     assert(readTotal(sk) == 18)
     assert(StreamingSketch.compactSketch(spark, sk) == 1)
     assert(readTotal(sk) == 18)
@@ -78,134 +92,96 @@ class CompactionSpec extends SparkSpec {
       "increments below every in-grace watermark are reaped")
     assert(fs.exists(new Path(s"$sk/increments/batch=2")),
       "the just-folded increment survives its own grace round")
-    assert(!fs.exists(new Path(s"$sk/base")),
-      "the legacy base is GC'd once two versioned generations supersede it")
+    assert(!fs.exists(new Path(s"$sk/base_v1")),
+      "the seed generation is reaped once two later generations supersede it")
   }
 
-  test("foldIncrements: every interrupted-swap state converges — torn " +
-       "write-aside, mid-swap (base missing), post-swap (old leftover)") {
-    // state A: crash during the base_compact write (torn dir) — the fold
-    // must discard it and refold from the intact base + increments
-    val a = tmp("graft_cmp_a")
-    writeCounter(s"$a/base", 10)
-    writeCounter(s"$a/increments/batch=0", 4)
-    fs.mkdirs(new Path(s"$a/base_compact"))
-    fs.create(new Path(s"$a/base_compact/part-torn.parquet"), true).close()
-    assert(StreamingSketch.compactSketch(spark, a) == 1)
-    assert(readTotal(a) == 14)
-    assert(!fs.exists(new Path(s"$a/base_compact")) &&
-      !fs.exists(new Path(s"$a/base_old")))
-
-    // state B: crash BETWEEN rename(base -> base_old) and
-    // rename(base_compact -> base): base absent, base_old is the only
-    // copy, a complete-looking base_compact is on disk. Recovery must
-    // restore base_old (NOT fold increments into an empty base, NOT
-    // delete the only copy) and discard the write-aside; the refold then
-    // produces the right value.
-    val b = tmp("graft_cmp_b")
-    writeCounter(s"$b/base", 10)
-    writeCounter(s"$b/increments/batch=0", 4)
-    writeCounter(s"$b/base_compact", 99) // plausible but must be discarded
-    assert(fs.rename(new Path(s"$b/base"), new Path(s"$b/base_old")))
-    assert(StreamingSketch.compactSketch(spark, b) == 1)
-    assert(readTotal(b) == 14,
-      "mid-swap recovery must restore the original base before refolding")
-    assert(!fs.exists(new Path(s"$b/base_compact")) &&
-      !fs.exists(new Path(s"$b/base_old")))
-
-    // state C: crash AFTER the promote (new base live, watermark stamped)
-    // but before base_old / increment deletes — the old copy must be
-    // dropped and the still-present folded increment must not double-count
-    val c = tmp("graft_cmp_c")
-    writeCounter(s"$c/base", 10)
-    writeCounter(s"$c/increments/batch=0", 4)
-    assert(StreamingSketch.compactSketch(spark, c) == 1) // base = 14, wm = 0
-    writeCounter(s"$c/base_old", 10)                     // legacy-debris copy
-    writeCounter(s"$c/increments/batch=0", 4)            // re-landed increment
-    assert(readTotal(c) == 14, "watermark prune covers the re-landed increment")
-    assert(StreamingSketch.compactSketch(spark, c) == 0)
-    assert(readTotal(c) == 14)
-    assert(!fs.exists(new Path(s"$c/base_old")),
-      "legacy swap debris is converged on the next maintenance entry")
-    // the re-landed folded increment is retained while the legacy base is
-    // in grace, and reaped once a second generation pushes it out
-    assert(fs.exists(new Path(s"$c/increments/batch=0")))
-    writeCounter(s"$c/increments/batch=1", 3)
-    assert(StreamingSketch.compactSketch(spark, c) == 1)
-    assert(readTotal(c) == 17)
-    assert(!fs.exists(new Path(s"$c/increments/batch=0")),
-      "out-of-grace increments are reaped by the next fold")
+  test("a fresh build publishes generation 1 through the pointer and " +
+       "leaves no literal data directory") {
+    import graft.text.LexIndex
+    val idx = s"${tmp("graft_cmp_fresh")}/idx"
+    LexIndex.writeIndex(Seq((1L, "alpha beta")).toDF("doc_id", "text"),
+      "doc_id", "text", idx, nBuckets = 4)
+    assert(listing(idx) == Set("postings", "doclens"))
+    assert(listing(s"$idx/postings") ==
+      Set("_pointer", "base_v1", "meta_v1"))
+    assert(listing(s"$idx/doclens") == Set("_pointer", "base_v1"))
+    assert(listing(s"$idx/postings/_pointer") == Set("p000000000001"))
   }
 
-  test("promote: multi-directory swap is all-or-nothing across crashes") {
-    def mk(root: String, name: String, tag: String): Unit = {
-      fs.mkdirs(new Path(s"$root/$name"))
-      fs.create(new Path(s"$root/$name/$tag"), true).close()
+  test("a torn, uncommitted next generation is never read; the next op " +
+       "discards it and produces the right total") {
+    val sk = tmp("graft_cmp_torn")
+    seedSketch(sk, 10)
+    landCounter(sk, 0, 4)
+    // a fold crashed mid-write of generation 2, before its pointer
+    // commit: a plausible-looking payload plus a torn part file
+    graft.ops.Stats.countMinSketch(counter(99), "k", depth = 1, width = 1)
+      .write.parquet(s"$sk/base_v2")
+    fs.create(new Path(s"$sk/base_v2/part-torn.parquet"), true).close()
+    assert(readTotal(sk) == 14, "an uncommitted generation is never read")
+    assert(StreamingSketch.compactSketch(spark, sk) == 1)
+    assert(readTotal(sk) == 14,
+      "the fold rewrites generation 2 from the intact base + increment")
+    assert(!fs.exists(new Path(s"$sk/base_v2/part-torn.parquet")))
+  }
+
+  test("a multi-name publish that crashed after writing some payload " +
+       "directories still reads all-old") {
+    import graft.text.{LexIndex, Retrieval}
+    val docs = Seq((1L, "alpha beta gamma"), (2L, "beta delta"))
+      .toDF("doc_id", "text")
+    val idx = s"${tmp("graft_cmp_multi")}/idx"
+    LexIndex.writeIndex(docs, "doc_id", "text", idx, nBuckets = 4)
+    def scores() = LexIndex.bm25Indexed(spark, idx, Seq("beta")).collect()
+      .map(r => r.getLong(0) -> r.getDouble(2)).toMap
+    val truth = scores()
+    assert(truth == Retrieval.bm25(docs, "doc_id", "text", Seq("beta"))
+      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap)
+    // the postings base of generation 2 is written under a different
+    // bucket width; the crash hits before its meta and the commit
+    intercept[IllegalStateException] {
+      Compaction.publish(spark, s"$idx/postings", Seq("base", "meta")) {
+        out =>
+          LexIndex.postings(docs, "doc_id", "text")
+            .withColumn("bucket", lit(7))
+            .write.partitionBy("bucket").parquet(out("base"))
+          throw new IllegalStateException("crash before the commit")
+      }
     }
-    def tagOf(root: String, name: String): String =
-      fs.listStatus(new Path(s"$root/$name")).map(_.getPath.getName).min
+    assert(fs.exists(new Path(s"$idx/postings/base_v2")))
+    assert(scores() == truth, "the old base + old meta pair is still live")
+    // the next op reuses generation 2's slot and reads right
+    LexIndex.rebuildIndex(spark, idx)
+    assert(scores() == truth)
+    assert(Compaction.view(spark, s"$idx/postings").dir("meta")
+      .contains(s"$idx/postings/meta_v2"))
+  }
 
-    def resolvedTag(root: String, name: String): String = {
-      val d = Compaction.resolve(spark, root, name).get
-      fs.listStatus(new Path(d)).map(_.getPath.getName).min
-    }
-
-    // clean promote: both names flip TOGETHER in one pointer commit; the
-    // superseded legacy dirs stay readable for one grace round
-    val p = tmp("graft_promote")
-    mk(p, "x", "vOLD"); mk(p, "y", "vOLD")
-    mk(p, "x_new", "vNEW"); mk(p, "y_new", "vNEW")
-    Compaction.promote(spark, p, Seq("x", "y"))
-    assert(resolvedTag(p, "x") == "vNEW" && resolvedTag(p, "y") == "vNEW")
-    assert(!fs.exists(new Path(s"$p/x_new")) &&
-      !fs.exists(new Path(s"$p/_promote_pending")),
-      "no payload/marker debris may survive a promote")
-    assert(tagOf(p, "x") == "vOLD",
-      "the previous generation stays readable through the grace period")
-    // a second promote pushes the legacy generation out of grace; the
-    // FIRST versioned generation is still referenced by the previous
-    // pointer, so it survives this round
-    val gen1x = Compaction.resolve(spark, p, "x").get
-    mk(p, "x_new", "vNEW2"); mk(p, "y_new", "vNEW2")
-    Compaction.promote(spark, p, Seq("x", "y"))
-    assert(resolvedTag(p, "x") == "vNEW2" && resolvedTag(p, "y") == "vNEW2")
-    assert(!fs.exists(new Path(s"$p/x")) && !fs.exists(new Path(s"$p/y")),
-      "out-of-grace legacy dirs are reaped")
-    assert(fs.exists(new Path(gen1x)),
-      "the previous versioned generation stays in grace")
-    // a third promote pushes generation 1 out of grace
-    mk(p, "x_new", "vNEW3"); mk(p, "y_new", "vNEW3")
-    Compaction.promote(spark, p, Seq("x", "y"))
-    assert(resolvedTag(p, "x") == "vNEW3")
-    assert(!fs.exists(new Path(gen1x)),
-      "out-of-grace versioned generations are reaped")
-
-    // pre-commit crash: _new dirs exist, no marker — recovery ROLLS BACK
-    val q = tmp("graft_promote_pre")
-    mk(q, "x", "vOLD"); mk(q, "x_new", "vNEW")
-    Compaction.recoverPromote(spark, q)
-    assert(tagOf(q, "x") == "vOLD")
-    assert(!fs.exists(new Path(s"$q/x_new")))
-
-    // post-commit crash mid-swap: marker present, x already flipped
-    // (x_old left), y not yet — recovery ROLLS FORWARD both
-    val r = tmp("graft_promote_post")
-    mk(r, "x", "vNEW"); mk(r, "x_old", "vOLD")
-    mk(r, "y", "vOLD"); mk(r, "y_new", "vNEW")
-    val out = fs.create(new Path(s"$r/_promote_pending"), false)
-    out.write("x\ny".getBytes("UTF-8")); out.close()
-    Compaction.recoverPromote(spark, r)
-    assert(tagOf(r, "x") == "vNEW" && tagOf(r, "y") == "vNEW")
-    assert(fs.listStatus(new Path(r)).map(_.getPath.getName).toSet ==
-      Set("x", "y"))
-
-    // a fold-protocol leftover (base_old as the ONLY copy) must NOT be
-    // touched by promote recovery — it belongs to recover()
-    val s2 = tmp("graft_promote_fold")
-    mk(s2, "base_old", "vOLD")
-    Compaction.recoverPromote(spark, s2)
-    assert(fs.exists(new Path(s"$s2/base_old")),
-      "promote recovery must not delete the fold protocol's only copy")
+  test("a crash after the commit but before GC is reaped by the next op") {
+    val sk = tmp("graft_cmp_postcommit")
+    seedSketch(sk, 10)
+    landCounter(sk, 0, 1)
+    landCounter(sk, 1, 2)
+    // with the wall-clock floor on, GC reaps nothing — the disk state of
+    // a writer that died right after each commit
+    spark.conf.set("spark.graft.gcGraceMinutes", "30")
+    try {
+      assert(StreamingSketch.compactSketch(spark, sk) == 2)
+      landCounter(sk, 2, 5)
+      assert(StreamingSketch.compactSketch(spark, sk) == 1)
+    } finally spark.conf.set("spark.graft.gcGraceMinutes", "0")
+    assert(listing(sk) == Set("_pointer", "base_v1", "base_v2", "base_v3",
+      "increments"))
+    assert(listing(s"$sk/increments") ==
+      Set("batch=0", "batch=1", "batch=2"))
+    // the next op — a fold with nothing to fold — runs the skipped GC
+    assert(StreamingSketch.compactSketch(spark, sk) == 0)
+    assert(listing(sk) == Set("_pointer", "base_v2", "base_v3",
+      "increments"))
+    assert(listing(s"$sk/_pointer").size == 2)
+    assert(listing(s"$sk/increments") == Set("batch=2"))
+    assert(readTotal(sk) == 18)
   }
 
   test("sink-side replay guards: appendBatch / appendSignatureIndex drop " +
@@ -223,9 +199,6 @@ class CompactionSpec extends SparkSpec {
       s"$lex/idx", 0L)
     val (pf, df) = LexIndex.compactIndex(spark, s"$lex/idx")
     assert(pf == 1 && df == 1)
-    def listing(d: String): Set[String] =
-      if (!fs.exists(new Path(d))) Set.empty
-      else fs.listStatus(new Path(d)).map(_.getPath.getName).toSet
     val before = (listing(s"$lex/idx/postings/increments"),
       listing(s"$lex/idx/doclens/increments"))
     LexIndex.appendBatch(docs.filter(col("doc_id") === 2), "doc_id", "text",
@@ -281,8 +254,8 @@ class CompactionSpec extends SparkSpec {
   test("write lease: a held lease makes a second maintenance op fail " +
        "fast with the index intact; a stale lease is broken after TTL") {
     val sk = tmp("graft_cmp_lease")
-    writeCounter(s"$sk/base", 10)
-    writeCounter(s"$sk/increments/batch=0", 1)
+    seedSketch(sk, 10)
+    landCounter(sk, 0, 1)
     // a concurrent writer holds the lease (what a racing fold would have
     // created): this op must refuse, not race the pointer commit
     val lease = new Path(s"$sk/_lease")
@@ -313,8 +286,8 @@ class CompactionSpec extends SparkSpec {
        "folds, so a long reader planned before the first fold still " +
        "executes against complete files") {
     val sk = tmp("graft_cmp_grace")
-    writeCounter(s"$sk/base", 10)
-    writeCounter(s"$sk/increments/batch=0", 1)
+    seedSketch(sk, 10)
+    landCounter(sk, 0, 1)
     spark.conf.set("spark.graft.gcGraceMinutes", "30")
     try {
       assert(StreamingSketch.compactSketch(spark, sk) == 1)
@@ -324,9 +297,9 @@ class CompactionSpec extends SparkSpec {
       val planned = spark.read.parquet(oldBase)
       // two more rapid folds — under generation counting alone these
       // would reap generation 1 and batch=0/1
-      writeCounter(s"$sk/increments/batch=1", 2)
+      landCounter(sk, 1, 2)
       assert(StreamingSketch.compactSketch(spark, sk) == 1)
-      writeCounter(s"$sk/increments/batch=2", 5)
+      landCounter(sk, 2, 5)
       assert(StreamingSketch.compactSketch(spark, sk) == 1)
       assert(readTotal(sk) == 18)
       // the floor kept every superseded artifact the reader could hold
@@ -339,7 +312,7 @@ class CompactionSpec extends SparkSpec {
         "the reader planned before the folds still executes")
     } finally spark.conf.set("spark.graft.gcGraceMinutes", "0")
     // back under generation counting: the next op reaps what aged out
-    writeCounter(s"$sk/increments/batch=3", 3)
+    landCounter(sk, 3, 3)
     assert(StreamingSketch.compactSketch(spark, sk) == 1)
     assert(!fs.exists(new Path(s"$sk/increments/batch=0")),
       "with the floor off, out-of-grace increments are reaped again")

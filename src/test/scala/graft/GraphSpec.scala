@@ -344,6 +344,21 @@ class GraphSpec extends SparkSpec {
     assert(got == Map(1L -> 2L, 2L -> 2L, 3L -> 2L))
   }
 
+  test("kCore converging on exactly the last allowed round returns the " +
+       "core instead of throwing") {
+    // the pendant-path peel drops 5, then 4, then confirms: two
+    // shrinking rounds fit a budget of two
+    val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L))
+      .toDF("s", "t")
+    val got = Graph.kCore(edges, "s", "t", k = 2, maxRounds = 2)
+      .as[(Long, Long)].collect().toMap
+    assert(got == Map(1L -> 2L, 2L -> 2L, 3L -> 2L))
+    val e = intercept[IllegalStateException] {
+      Graph.kCore(edges, "s", "t", k = 2, maxRounds = 1)
+    }
+    assert(e.getMessage.contains("(6 edges)"), e.getMessage)
+  }
+
   test("kCore is empty on a tree (no 2-core) and total on a clique") {
     val path = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("s", "t")
     assert(Graph.kCore(path, "s", "t", k = 2).isEmpty)

@@ -36,7 +36,8 @@ class MaintenanceSpec extends SparkSpec {
     StreamingAnn.writeBaseIndex(e.filter(col("vec_id") % 10 =!= 0),
       "vec_id", "embedding", "label", ann)
     Similarity.ivfAssign(e.filter(col("vec_id") % 10 === 0), "vec_id",
-        "embedding", spark.read.parquet(s"$ann/centroids"))
+        "embedding", spark.read.parquet(
+          Compaction.view(spark, ann).path("centroids")))
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$ann/increments/batch=0")
     PqIndex.writeIndex(e.filter(col("vec_id") % 10 =!= 0), "vec_id",

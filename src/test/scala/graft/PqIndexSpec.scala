@@ -55,7 +55,8 @@ class PqIndexSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def incListing() = {
-      val ip = new org.apache.hadoop.fs.Path(s"$dir/idx/codes/increments")
+      val ip = new org.apache.hadoop.fs.Path(graft.streaming.Compaction
+        .view(spark, s"$dir/idx").path("codes") + "/increments")
       if (!fs.exists(ip)) Set.empty[String]
       else fs.listStatus(ip).map(_.getPath.getName).toSet
     }
@@ -73,19 +74,20 @@ class PqIndexSpec extends SparkSpec {
     val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
     PqIndex.writeIvfPq(e, "vec_id", "embedding", "label", cb, s"$dir/idx")
     val q = e.filter(col("vec_id") < 3)
-    val nCells = spark.read.parquet(s"$dir/idx/centroids").count().toInt
+    val v = graft.streaming.Compaction.view(spark, s"$dir/idx")
+    val nCells = spark.read.parquet(v.path("centroids")).count().toInt
     // with nProbe = every cell the candidate set is the whole corpus —
     // the ranking must equal flat annPq over the same codes
     val viaIvf = PqIndex.searchIvfPq(spark, s"$dir/idx", q, "vec_id",
       "embedding", k = 5, nProbe = nCells).collect().toSet
     val flat = Similarity.annPq(
-      spark.read.parquet(s"$dir/idx/postings").select("vec_id", "codes"),
+      spark.read.parquet(v.path("postings")).select("vec_id", "codes"),
       cb, q, "vec_id", "embedding", k = 5).collect().toSet
     assert(viaIvf == flat)
     // narrow probe returns k rows per query and the scan is cell-pruned
     assert(PqIndex.searchIvfPq(spark, s"$dir/idx", q, "vec_id",
       "embedding", k = 5, nProbe = 1).count() == 3 * 5)
-    val plan = spark.read.parquet(s"$dir/idx/postings")
+    val plan = spark.read.parquet(v.path("postings"))
       .filter(col("cell").isInCollection(Seq(0, 1)))
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("cell"), plan)
@@ -153,7 +155,7 @@ class PqIndexSpec extends SparkSpec {
     assert(PqIndex.retrainIndexIfDrifted(spark, s"$d2/idx", all,
       "vec_id", "embedding", m = 4, ksub = 4, maxL1 = stormy / 2))
     // the retrain must subsume the old-codebook increments: the LIVE
-    // codes tree (the promoted generation) starts with no increments at
+    // codes tree (the published generation) starts with no increments at
     // all — the pre-retrain tree keeps its own for its grace round
     val liveCodes = graft.streaming.Compaction
       .resolve(spark, s"$d2/idx", "codes").get
@@ -186,14 +188,19 @@ class PqIndexSpec extends SparkSpec {
        "codeword used only by the increments lands under its real " +
        "subspace, not a NULL key") {
     import spark.implicits._
-    // write the code tables directly: drift reads only codes/base and
-    // codes/increments, so the layout can be planted exactly
+    // publish the code tables directly: drift reads only the code
+    // table's base and increments, so the layout can be planted exactly
+    import graft.streaming.Compaction
     val dir = java.nio.file.Files.createTempDirectory("graft_pq1s").toString
-    Seq((0L, Seq(0, 0, 0, 0)), (1L, Seq(1, 1, 1, 1)))
-      .toDF("vec_id", "codes")
-      .write.parquet(s"$dir/idx/codes/base")
-    Seq((2L, Seq(3, 3, 3, 3))).toDF("vec_id", "codes")
-      .write.parquet(s"$dir/idx/codes/increments/batch=0")
+    Compaction.publish(spark, s"$dir/idx", Seq("codes")) { out =>
+      Compaction.publish(spark, out("codes"), Seq("base")) { c =>
+        Seq((0L, Seq(0, 0, 0, 0)), (1L, Seq(1, 1, 1, 1)))
+          .toDF("vec_id", "codes").write.parquet(c("base"))
+      }
+    }
+    Seq((2L, Seq(3, 3, 3, 3))).toDF("vec_id", "codes").write.parquet(
+      Compaction.view(spark, s"$dir/idx").path("codes") +
+        "/increments/batch=0")
     val rows = PqIndex.codeUsageDrift(spark, s"$dir/idx").collect()
     // base probs {0: 1/2, 1: 1/2}, inc {3: 1}: true L1 = 1/2 + 1/2 + 1
     // per subspace; dropping the inc-only codeword would read 1.0

@@ -36,7 +36,8 @@ class StreamingAnnSpec extends SparkSpec {
 
     // maintained postings = exactly one row per ingested vector, in the
     // same cell the from-scratch assignment puts it
-    val cents = spark.read.parquet(s"$idx/centroids")
+    val cents = spark.read.parquet(
+      graft.streaming.Compaction.view(spark, idx).path("centroids"))
     val posted = StreamingAnn.readPostings(spark, idx)
       .select("vec_id", "cell").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
@@ -97,7 +98,8 @@ class StreamingAnnSpec extends SparkSpec {
     val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
     StreamingAnn.writeBaseIndex(e.filter(col("vec_id") % 2 === 0),
       "vec_id", "embedding", "label", idx)
-    val cents0 = spark.read.parquet(s"$idx/centroids")
+    val cents0 = spark.read.parquet(
+      graft.streaming.Compaction.view(spark, idx).path("centroids"))
     Similarity.ivfAssign(e.filter(col("vec_id") % 2 === 1), "vec_id",
         "embedding", cents0)
       .write.mode("overwrite").partitionBy("cell")

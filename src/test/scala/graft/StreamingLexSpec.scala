@@ -44,7 +44,8 @@ class StreamingLexSpec extends SparkSpec {
       "maintained index must score exactly like from-scratch BM25")
 
     // the probed postings scan prunes untouched term buckets
-    val nBuckets = spark.read.parquet(s"$idx/meta")
+    val nBuckets = spark.read.parquet(
+        graft.streaming.Compaction.view(spark, s"$idx/postings").path("meta"))
       .select("n_buckets").head().getInt(0)
     val plan = LexIndex.readPostings(spark, idx)
       .filter(col("bucket").isInCollection(Seq(0, 1)))
@@ -103,7 +104,9 @@ class StreamingLexSpec extends SparkSpec {
     // materializing the postings aggregation, then the conditional write
     // recomputing all of it, then the doclens landing
     val oldJobs = count {
-      val nBuckets = spark.read.parquet(s"$dir/idx/meta")
+      val nBuckets = spark.read.parquet(
+          graft.streaming.Compaction.view(spark, s"$dir/idx/postings")
+            .path("meta"))
         .select("n_buckets").head().getInt(0)
       val post = LexIndex.postings(batch, "doc_id", "text")
         .withColumn("bucket", pmod(graft.text.TextOps.h64(col("term")),
@@ -217,8 +220,7 @@ class StreamingLexSpec extends SparkSpec {
     val width = LexIndex.deriveBuckets(
       LexIndex.readPostings(spark, dir).count())
     assert(width != 4)
-    val metaDir = Compaction.view(spark, s"$dir/postings").dir("meta")
-      .getOrElse(s"$dir/meta")
+    val metaDir = Compaction.view(spark, s"$dir/postings").path("meta")
     assert(spark.read.parquet(metaDir).head().getInt(0) == width)
     assert(LexIndex.readPostings(spark, dir)
       .filter(col("bucket") >= width).isEmpty)

@@ -20,7 +20,7 @@ class TombstoneSpec extends SparkSpec {
     .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
   /** The LIVE physical directory of a maintained name — post-maintenance
-    * the legacy literal path may still exist in grace with stale bytes,
+    * the superseded generation may still exist in grace with stale bytes,
     * so physical-erasure assertions must resolve the pointer. */
   private def live(root: String, name: String): String =
     Compaction.resolve(spark, root, name).get
@@ -123,7 +123,7 @@ class TombstoneSpec extends SparkSpec {
     StreamingAnn.writeBaseIndex(e.filter(col("vec_id") % 10 =!= 0),
       "vec_id", "embedding", "label", idx)
     Similarity.ivfAssign(e.filter(col("vec_id") % 10 === 0), "vec_id",
-        "embedding", spark.read.parquet(s"$idx/centroids"))
+        "embedding", spark.read.parquet(live(idx, "centroids")))
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$idx/increments/batch=0")
 
@@ -143,7 +143,7 @@ class TombstoneSpec extends SparkSpec {
     // truth: from-scratch assignment of the filtered corpus to the SAME
     // frozen centroids (deletes never move a centroid until recluster);
     // eagerly pinned — the recluster below deletes these part files
-    val cents = spark.read.parquet(s"$idx/centroids").localCheckpoint()
+    val cents = spark.read.parquet(live(idx, "centroids")).localCheckpoint()
     val expect = Similarity.annIvfStored(
       Similarity.ivfAssign(e.filter(col("vec_id") % 7 =!= 3), "vec_id",
         "embedding", cents).select(col("vec_id"), col("cell"), col("v")),
@@ -268,7 +268,7 @@ class TombstoneSpec extends SparkSpec {
       .filter(col("vec_id").isInCollection(del)).head(1).isEmpty)
 
     // retrain: codebook and codes rebuilt from live vectors only (the
-    // codes TREE is the promoted name; the base within it is legacy)
+    // codes TREE is the published name; its base is versioned within it)
     graft.sim.PqIndex.retrainIndex(spark, idx, e, "vec_id", "embedding",
       m = 8, ksub = 16, maxIter = 2)
     assert(spark.read.parquet(live(live(idx, "codes"), "base"))
